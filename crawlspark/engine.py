@@ -128,37 +128,8 @@ class EngineConfig:
 
 class CrawlEngine:
     def __init__(self, spark: SparkSession, cfg: EngineConfig):
-        if (
-            cfg.graph.pattern_budget is not None
-            and cfg.graph.host_page_budget is not None
-        ):
-            # C23 + C38: two composed declarative caps cannot reproduce
-            # the sequential joint accounting (a row one cap rejects
-            # must not consume the other cap's slot); the refsim
-            # refuses the combination identically
-            raise ValueError(
-                "pattern_budget and host_page_budget are not combinable"
-            )
-        if cfg.graph.frontier_cap is not None and not (
-            0 <= cfg.graph.frontier_slack < cfg.graph.frontier_cap
-        ):
-            raise ValueError("frontier_slack must satisfy 0 <= slack < cap")
-        if cfg.graph.host_frontier_quota is not None:
-            # C40 + C23/C38: a transient ring quota composed with a
-            # lifetime admission budget cannot reproduce the
-            # sequential joint accounting (a row one cap rejects must
-            # not consume the other's slot); the refsim refuses the
-            # combination identically
-            if (
-                cfg.graph.pattern_budget is not None
-                or cfg.graph.host_page_budget is not None
-            ):
-                raise ValueError(
-                    "host_frontier_quota is not combinable with "
-                    "pattern_budget / host_page_budget"
-                )
-            if cfg.graph.host_frontier_quota < 1:
-                raise ValueError("host_frontier_quota must be >= 1")
+        # refuses an invalid crawl policy (the refsim calls the same rule)
+        self.admission_cap = cfg.graph.admission_cap()
         self.spark = spark
         self.cfg = cfg
         self.cat = Catalog(spark, cfg.warehouse)
@@ -284,6 +255,27 @@ class CrawlEngine:
         if self.cfg.graph.domain_politeness:
             view = view.distinct()
         return view
+
+    def _with_scope(self, df: DataFrame, cap) -> DataFrame:
+        """Add the C40 politeness-bucket scope column when ``cap`` is
+        scoped by it (the C33 key: registered domain under grouping)."""
+        if "pol_key" in cap.scope:
+            return df.withColumn("pol_key", self._pol_expr())
+        return df
+
+    def _cap_prior(self, cap, snap, queued: DataFrame) -> DataFrame:
+        """(scope…, n_admitted) for an admission cap: the lifetime
+        counter table's append-only deltas summed on read, or (C40)
+        the pending ring at cycle start — one count over the
+        working-state queued frame, so dropped URLs re-candidate and
+        admit once their bucket drains."""
+        if cap.counts:
+            rows = self.cat.read(cap.counts, snap)
+        else:
+            rows = self._with_scope(queued, cap).select(
+                *cap.scope, F.lit(1).cast("long").alias("n")
+            )
+        return rows.groupBy(*cap.scope).agg(F.sum("n").alias("n_admitted"))
 
     def _clock_hand(self, snap) -> int:
         """C39: the admission seq the next eviction sweep resumes at
@@ -431,29 +423,14 @@ class CrawlEngine:
         f0 = schedule.with_salt(f0, self.cfg.n_salt)
         f0 = f0.withColumn("depth", F.lit(0))
         f0 = politeness.scope_filter(f0, g)
-        if g.host_page_budget is not None:
-            # C38: seed admissions consume the host budget first, in
-            # seed-list order — the refsim's admit() caps seeds
-            # identically
-            w_hb = Window.partitionBy("host").orderBy("pos")
-            f0 = (
-                f0.withColumn("_hb", F.row_number().over(w_hb))
-                .filter(F.col("_hb") <= g.host_page_budget)
-                .drop("_hb")
-            )
-        if g.host_frontier_quota is not None:
-            # C40: the ring is empty at bootstrap, so the first
-            # `quota` seeds per politeness bucket (seed-list order)
-            # fill each bucket's share; the rest stay unseen and may
-            # re-candidate once the bucket's queue drains. The bucket
-            # is the C33 politeness key — the registered domain under
-            # domain grouping (sub-hosts share one quota), the host
-            # itself otherwise.
-            w_fq = Window.partitionBy(self._pol_expr()).orderBy("pos")
-            f0 = (
-                f0.withColumn("_fq", F.row_number().over(w_fq))
-                .filter(F.col("_fq") <= g.host_frontier_quota)
-                .drop("_fq")
+        cap = self.admission_cap
+        if cap is not None:
+            # the ring and every lifetime count are empty at bootstrap:
+            # the first `budget` seeds per scope (seed-list order) are
+            # admitted; the rest stay unseen, as in the refsim's admit()
+            f0 = schedule.pattern_cap(
+                self._with_scope(f0, cap), None, cap.budget,
+                keys=cap.scope, order=("pos",),
             )
         f0 = schedule.with_score(f0)
         # seed seq = seed-list position; rank distributed above ~64k
@@ -490,20 +467,11 @@ class CrawlEngine:
         txn = self.cat.begin()
         txn.append("frontier", frontier0)
         txn.append("url_seen", seen0, partition_by=["part"])
-        if g.pattern_budget is not None:
-            # C23: seed admissions open each pattern's lifetime count
-            txn.append(
-                "pattern_counts",
-                f0.groupBy("host", "path").agg(
-                    F.count("*").cast("long").alias("n")
-                ),
-            )
-        if g.host_page_budget is not None:
-            # C38: seed admissions open each host's lifetime count
-            txn.append(
-                "host_admissions",
-                f0.groupBy("host").agg(F.count("*").cast("long").alias("n")),
-            )
+        if cap is not None and cap.counts:
+            # seed admissions open each scope's lifetime count
+            txn.append(cap.counts, f0.groupBy(*cap.scope).agg(
+                F.count("*").cast("long").alias("n")
+            ))
         txn.overwrite(self._sidecar_table, bloom0)
         txn.overwrite("host_state", hs0)
         txn.overwrite("host_config", hc)
@@ -624,6 +592,11 @@ class CrawlEngine:
             return {"cycle": c, "scheduled": 0, "deduped": 0, "discovered": 0,
                     "wall_ms": int((time.time() - t0) * 1000), "stop": True}
         docs_ok = docs.filter(F.col("ok") & F.col("redirect_to").isNull())
+        if g.meta_robots_every or g.canonical_every:
+            # C36/C37 parse the same joined page text
+            page_text = F.concat_ws(
+                " ", F.transform("spans", lambda s: s["text"])
+            )
         if g.meta_robots_every:
             # C36 robots META directives, honored from the PARSED page
             # bytes (one JVM regexp over the joined text spans — the
@@ -632,11 +605,8 @@ class CrawlEngine:
             # but the document is never stored; nofollow → stored, but
             # its links vanish from discovery. Narrow column math on
             # the cached fetch frame — no extra shuffle, flag-gated.
-            _mtxt = F.concat_ws(
-                " ", F.transform("spans", lambda s: s["text"])
-            )
             _mdir = F.regexp_extract(
-                _mtxt, '<meta name="robots" content="([a-z,]+)">', 1
+                page_text, '<meta name="robots" content="([a-z,]+)">', 1
             )
             docs_ok = docs_ok.withColumn(
                 "_m_noindex", _mdir.contains("noindex")
@@ -651,11 +621,8 @@ class CrawlEngine:
             # ordered before this slot's links (the C24 redirect
             # discipline), and the hop lands in `canonicals`. Narrow
             # column math on the cached fetch frame, flag-gated.
-            _ctxt = F.concat_ws(
-                " ", F.transform("spans", lambda s: s["text"])
-            )
             _canon = F.regexp_extract(
-                _ctxt, '<link rel="canonical" href="([^"]+)">', 1
+                page_text, '<link rel="canonical" href="([^"]+)">', 1
             )
             docs_ok = docs_ok.withColumn("_c_canon", _canon).withColumn(
                 "_c_alias",
@@ -718,39 +685,37 @@ class CrawlEngine:
             if g.meta_robots_every
             else docs_ok
         )
+
+        def hops(df: DataFrame, target: str) -> DataFrame:
+            # a hop target re-enters discovery at the SAME depth —
+            # depth-1 here so the shared +1 below restores it — ordered
+            # at (batch_pos, -1, -1): a serial worker sees it before any
+            # link of that batch slot, and the refsim admits in that order
+            return df.select(
+                "doc_id",
+                (F.col("depth") - 1).cast("int").alias("depth"),
+                "batch_pos",
+                F.lit(-1).alias("span_pos"),
+                F.lit(-1).alias("link_pos"),
+                F.col(target).alias("raw_url"),
+            )
+
         if g.redirect_every:
             # C24: a successful 301 is a terminal fetch of the alias;
-            # its Location re-enters the discovery path at the SAME
-            # depth (redirects don't deepen) — depth-1 here so the
-            # shared +1 below restores it — ordered at (batch_pos, -1,
-            # -1): a serial worker sees the Location before any link of
-            # that batch slot, and the refsim admits in that order.
-            redir_hops = docs.filter(
-                F.col("ok") & F.col("redirect_to").isNotNull()
-            ).select(
-                "doc_id",
-                (F.col("depth") - 1).cast("int").alias("depth"),
-                "batch_pos",
-                F.lit(-1).alias("span_pos"),
-                F.lit(-1).alias("link_pos"),
-                F.col("redirect_to").alias("raw_url"),
-            )
-            links = links.unionByName(redir_hops)
+            # its Location re-enters discovery (redirects don't deepen)
+            links = links.unionByName(hops(
+                docs.filter(F.col("ok") & F.col("redirect_to").isNotNull()),
+                "redirect_to",
+            ))
         if g.canonical_every:
             # C37: the declared canonical re-enters discovery at the
-            # variant's depth, at (batch_pos, -1, -1) — ahead of the
-            # slot's body links (which include the declaration's own
-            # href at link_pos 0), so within-batch dedup keeps the
-            # SAME-DEPTH alias admission on both engines.
-            canon_hops = docs_ok.filter(F.col("_c_alias")).select(
-                "doc_id",
-                (F.col("depth") - 1).cast("int").alias("depth"),
-                "batch_pos",
-                F.lit(-1).alias("span_pos"),
-                F.lit(-1).alias("link_pos"),
-                F.col("_c_canon").alias("raw_url"),
+            # variant's depth, ahead of the slot's body links (which
+            # include the declaration's own href at link_pos 0), so
+            # within-batch dedup keeps the SAME-DEPTH alias admission on
+            # both engines.
+            links = links.unionByName(
+                hops(docs_ok.filter(F.col("_c_alias")), "_c_canon")
             )
-            links = links.unionByName(canon_hops)
         # resolve relative hrefs against the fetching doc (urljoin
         # semantics), then canonicalize — one Arrow pass (C13 → C1)
         cand = (
@@ -771,63 +736,17 @@ class CrawlEngine:
         # needs the exact cached plan, so rebinding this to the
         # assign_seq output would leak one cache entry per cycle
         novel_probed = self._seen_filter(cand, url_seen, bloom, snap)
-        if g.pattern_budget is not None:
-            # C23 trap guard: cap lifetime admissions per (host, path)
-            # — applied BEFORE the counters so capped-out URLs count as
+        cap = self.admission_cap
+        if cap is not None:
+            # C23/C38/C40 admission cap (GraphConfig.admission_cap),
+            # applied BEFORE the counters so capped-out URLs count as
             # deduped (cand − novel), exactly the refsim's accounting.
-            # Counts are append-only deltas summed on read (pattern
-            # cardinality ≪ seen cardinality; compacted with the rest
-            # of working state). forget()/reseed() do not decrement —
-            # the budget is a monotone lifetime allowance by design.
-            prior = (
-                self.cat.read("pattern_counts", snap)
-                .groupBy("host", "path")
-                .agg(F.sum("n").alias("n_admitted"))
-            )
+            # forget()/reseed() do not decrement a lifetime count.
             novel_probed = schedule.pattern_cap(
-                novel_probed, prior, g.pattern_budget
+                self._with_scope(novel_probed, cap),
+                self._cap_prior(cap, snap, queued), cap.budget,
+                keys=cap.scope,
             )
-        if g.host_page_budget is not None:
-            # C38 per-host lifetime page budget (Heritrix
-            # max-pages-per-host): cap lifetime frontier admissions per
-            # HOST — the site-budget control that stops one mega-host
-            # from owning the crawl. Same admission point, stay-unseen
-            # accounting, and two-phase salted cap as C23, keyed on
-            # host alone; counts are append-only deltas summed on read.
-            # Not combinable with pattern_budget (guarded in __init__):
-            # two composed declarative caps cannot reproduce the
-            # sequential joint accounting.
-            hprior = (
-                self.cat.read("host_admissions", snap)
-                .groupBy("host")
-                .agg(F.sum("n").alias("n_admitted"))
-            )
-            novel_probed = schedule.pattern_cap(
-                novel_probed, hprior, g.host_page_budget, keys=("host",)
-            )
-        if g.host_frontier_quota is not None:
-            # C40 per-host frontier quota (Mercator/Heritrix per-host
-            # queue bound): admit a host's discoveries only while its
-            # PENDING share — queued at cycle start + admissions this
-            # cycle, in arrival order — stays under the quota. Same
-            # admission point, stay-unseen accounting and two-phase
-            # salted cap as C23/C38, but the prior is the TRANSIENT
-            # ring occupancy (one count over the working-state queued
-            # frame), not a lifetime counter table: dropped URLs
-            # re-candidate and admit later once the host's queue
-            # drains. Composes with C39 (the sweep below sees the
-            # quota-shaped ring). Not combinable with C23/C38
-            # (guarded in __init__; the refsim refuses identically).
-            # the quota bucket is the C33 politeness key (registered
-            # domain under domain grouping, else the host) — C33 ∘ C40:
-            # a domain's sub-hosts share ONE ring share
-            qpend = queued.groupBy(self._pol_expr().alias("_qkey")).agg(
-                F.count("*").cast("long").alias("n_admitted")
-            )
-            novel_probed = schedule.pattern_cap(
-                novel_probed.withColumn("_qkey", self._pol_expr()),
-                qpend, g.host_frontier_quota, keys=("_qkey",),
-            ).drop("_qkey")
         novel_probed = novel_probed.persist()
 
         # per-partition (host_salt) lineage + counters: one tagged union
@@ -1088,18 +1007,10 @@ class CrawlEngine:
                 ("overwrite", self._sidecar_table, bloom_new, None),
                 ("append", "edges", edges_delta, None),
             ]
-            if g.pattern_budget is not None:
+            if cap is not None and cap.counts:
                 writes.append((
-                    "append", "pattern_counts",
-                    novel_probed.groupBy("host", "path").agg(
-                        F.count("*").cast("long").alias("n")
-                    ),
-                    None,
-                ))
-            if g.host_page_budget is not None:
-                writes.append((
-                    "append", "host_admissions",
-                    novel_probed.groupBy("host").agg(
+                    "append", cap.counts,
+                    novel_probed.groupBy(*cap.scope).agg(
                         F.count("*").cast("long").alias("n")
                     ),
                     None,

@@ -210,8 +210,9 @@ def assign_seq(novel: DataFrame, base_seq: int, distributed: bool = False) -> Da
 
 
 def pattern_cap(
-    novel: DataFrame, prior: DataFrame, budget: int,
+    novel: DataFrame, prior: DataFrame | None, budget: int,
     keys: tuple[str, ...] = ("host", "path"),
+    order: tuple[str, ...] = tuple(_SEQ_ORDER),
 ) -> DataFrame:
     """C23 crawler-trap guard: admit per (host, path) URL pattern only
     while lifetime admissions stay under ``budget``, first-discovered
@@ -235,13 +236,18 @@ def pattern_cap(
 
     ``keys`` generalizes the budget scope: ("host",) gives C38's
     per-host lifetime page budget (Heritrix max-pages-per-host) over
-    the same two-phase machinery."""
+    the same two-phase machinery (GraphConfig.admission_cap names the
+    scope). ``prior`` None means every prior count is 0 (bootstrap);
+    ``order`` is the arrival order (seed ``pos`` at bootstrap)."""
     kl = list(keys)
-    df = novel.join(prior, kl, "left").withColumn(
-        "_prior", F.coalesce(F.col("n_admitted"), F.lit(0))
-    )
-    w1 = Window.partitionBy(*kl, "host_salt").orderBy(*_SEQ_ORDER)
-    w2 = Window.partitionBy(*kl).orderBy(*_SEQ_ORDER)
+    if prior is None:
+        df = novel.withColumn("_prior", F.lit(0))
+    else:
+        df = novel.join(prior, kl, "left").withColumn(
+            "_prior", F.coalesce(F.col("n_admitted"), F.lit(0))
+        )
+    w1 = Window.partitionBy(*kl, "host_salt").orderBy(*order)
+    w2 = Window.partitionBy(*kl).orderBy(*order)
     return (
         df.withColumn("rn1", F.row_number().over(w1))
         .filter(F.col("rn1") + F.col("_prior") <= budget)

@@ -14,14 +14,14 @@ generator, canonicalizer, robots decision) — none of the engine's
 scheduling / dedup / politeness dataflow. It lives inside the package
 (rather than tests/) only so the driver-facing oracle generator in
 ``crawlspark.queries.crawl_oracle`` can import it without relying on a
-generically-named top-level ``tests`` package being importable from
-the driver's process; tests/refsim.py re-exports it.
+generically-named top-level ``tests`` package being importable.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 from urllib.parse import urljoin, urlsplit
 
@@ -133,29 +133,10 @@ class RefSim:
         queued: dict[str, tuple] = {}      # url_norm -> (score, seq, depth, host)
         attempts: dict[str, int] = {}      # url_norm -> failed attempts so far
         max_retries = cfg.max_retries
-        budget = cfg.pattern_budget        # C23 trap guard (None = off)
-        pat_admits: dict[tuple, int] = {}  # (host, path) -> admissions
-        host_admits: dict[str, int] = {}   # C38: host -> admissions
-        if cfg.pattern_budget is not None and cfg.host_page_budget is not None:
-            raise ValueError(
-                "pattern_budget and host_page_budget are not combinable: "
-                "two composed declarative caps cannot reproduce the "
-                "sequential joint accounting"
-            )
-        if cfg.host_frontier_quota is not None and (
-            cfg.pattern_budget is not None or cfg.host_page_budget is not None
-        ):
-            raise ValueError(
-                "host_frontier_quota is not combinable with "
-                "pattern_budget / host_page_budget"
-            )
-        # C40 per-host frontier quota: pending share per host at cycle
-        # START + admissions so far this cycle (both twins key the rule
-        # on the start-of-cycle snapshot, so same-cycle drains free
-        # slots only NEXT cycle — the conservative, order-independent
-        # reading the engine's batch admission can reproduce)
-        hq_pending0: dict[str, int] = {}
-        cyc_hq_admits: dict[str, int] = {}
+        # C23/C38/C40 admission cap (None = uncapped; refuses an invalid
+        # policy exactly as the engine does): scope -> prior + admissions
+        acap = cfg.admission_cap()
+        acap_counts: Counter = Counter()
         seq = 0
         refbit: set[str] = set()           # C39: pending URLs re-discovered
         clock_hand = 0                     # C39: the sweep resumes at this seq
@@ -188,43 +169,42 @@ class RefSim:
                 cyc_cands.add(u)
             if u in seen:
                 return
-            if budget is not None:
-                # C23: lifetime admission cap per (host, path) URL
-                # pattern — a rejected URL stays unseen (it counts as
-                # deduped this cycle and may re-candidate later, but
-                # never enters the frontier while the pattern is full)
-                pat = (host, path)
-                if pat_admits.get(pat, 0) >= budget:
+            if acap is not None:
+                # a capped URL stays unseen: it counts as deduped this
+                # cycle and may re-candidate later
+                k = acap.scope_of(host, path, pk[host])
+                if acap_counts[k] >= acap.budget:
                     return
-                pat_admits[pat] = pat_admits.get(pat, 0) + 1
-            if cfg.host_page_budget is not None:
-                # C38: lifetime admission cap per HOST (the site-budget
-                # control) — same stay-unseen semantics as C23; the two
-                # budgets are not combinable in one config (engine and
-                # GraphConfig both refuse), so the counters never
-                # interleave
-                if host_admits.get(host, 0) >= cfg.host_page_budget:
-                    return
-                host_admits[host] = host_admits.get(host, 0) + 1
-            if cfg.host_frontier_quota is not None:
-                # C40: bound the politeness BUCKET's share of the
-                # pending ring (registered domain under C33 grouping,
-                # else the host) — stay-unseen like C23/C38 (the URL
-                # may re-candidate and admit later, once the bucket's
-                # queue has drained)
-                qk = pk[host]
-                if (
-                    hq_pending0.get(qk, 0) + cyc_hq_admits.get(qk, 0)
-                    >= cfg.host_frontier_quota
-                ):
-                    return
-                cyc_hq_admits[qk] = cyc_hq_admits.get(qk, 0) + 1
+                acap_counts[k] += 1
             seen[u] = cycle
             if base is not None:
                 cyc_novel += 1
                 res.edges.append((base, u))
             seq += 1
             queued[u] = (depth + prio[host], seq, depth, host, cycle)
+
+        def reinject(urls: list[str], cycle: int) -> None:
+            """Forget ``urls`` (seen row, retry state, any queued row),
+            then re-inject the robots-allowed ones as depth-0
+            discoveries with strictly-new seqs in list order — the
+            engine's reseed rank. Operator re-injections bypass the
+            admission cap."""
+            nonlocal seq
+            for u in urls:
+                seen.pop(u, None)
+                attempts.pop(u, None)
+                queued.pop(u, None)
+            for u in urls:
+                sp = urlsplit(u)
+                host, path = sp.hostname, sp.path or "/"
+                if host in rules and robots_allowed(path, rules[host]):
+                    seen[u] = cycle
+                    seq += 1
+                    queued[u] = (prio[host], seq, 0, host, cycle)
+
+        def last_ok() -> dict[str, int]:
+            """url -> cycle of its last successful fetch."""
+            return {u: cc for (cc, _p, u, *_r, ok) in res.order if ok}
 
         for raw in cfg.seeds():
             admit(raw, 0, 0)
@@ -234,15 +214,15 @@ class RefSim:
             if not queued:
                 break
             urls_in = len(queued)
-            if cfg.host_frontier_quota is not None:
-                # C40: snapshot the per-host pending shares the cycle's
-                # admissions are judged against (engine: one count over
-                # the queued working-state frame)
-                hq_pending0.clear()
-                cyc_hq_admits.clear()
-                for _u, _tup in queued.items():
-                    _qk = pk[_tup[3]]
-                    hq_pending0[_qk] = hq_pending0.get(_qk, 0) + 1
+            if acap is not None and acap.counts is None:
+                # C40: the prior is the pending ring at cycle START (the
+                # engine counts the queued working-state frame), so
+                # same-cycle drains free slots only next cycle
+                acap_counts.clear()
+                acap_counts.update(
+                    acap.scope_of(t[3], urlsplit(u).path or "/", pk[t[3]])
+                    for u, t in queued.items()
+                )
             allow = {}
             for p in cap:
                 tokens[p] = min(cap[p], tokens[p] + refill[p])
@@ -401,28 +381,10 @@ class RefSim:
                 # old is forgotten and reseeded as a depth-0 discovery;
                 # seqs assigned in lexicographic order over the
                 # robots-allowed set, exactly the engine's reseed rank
-                last_ok = {}
-                for (cc, _p, u, _h, _s, _q, _d, _a, ok) in res.order:
-                    if ok:
-                        last_ok[u] = cc
-                due = sorted(
-                    u for u, lc in last_ok.items()
+                reinject(sorted(
+                    u for u, lc in last_ok().items()
                     if c - lc >= cfg.revisit_min_age
-                )
-                for u in due:
-                    seen.pop(u, None)
-                    attempts.pop(u, None)
-                    queued.pop(u, None)
-                for u in due:
-                    sp = urlsplit(u)
-                    host, path = sp.hostname, sp.path or "/"
-                    if host not in rules:
-                        continue
-                    if not robots_allowed(path, rules[host]):
-                        continue
-                    seen[u] = c
-                    seq += 1
-                    queued[u] = (0 + prio[host], seq, 0, host, c)
+                ), c)
             if cfg.sitemap_revisit_after == c:
                 # C25∘C26 sitemap-driven revisit (the engine's
                 # revisit_from_sitemaps()): re-fetch every stored
@@ -458,28 +420,11 @@ class RefSim:
                                 continue
                             lmc = int(lm.split("-")[2]) - 1
                             lastmods[cu] = max(lastmods.get(cu, -1), lmc)
-                last_ok = {}
-                for (cc, _p, u, _h, _s, _q, _d, _a, ok) in res.order:
-                    if ok:
-                        last_ok[u] = cc
-                due = sorted(
+                ok_at = last_ok()
+                reinject(sorted(
                     u for u, lmc in lastmods.items()
-                    if u in last_ok and lmc > last_ok[u]
-                )
-                for u in due:
-                    seen.pop(u, None)
-                    attempts.pop(u, None)
-                    queued.pop(u, None)
-                for u in due:
-                    sp2 = urlsplit(u)
-                    host, path = sp2.hostname, sp2.path or "/"
-                    if host not in rules:
-                        continue
-                    if not robots_allowed(path, rules[host]):
-                        continue
-                    seen[u] = c
-                    seq += 1
-                    queued[u] = (0 + prio[host], seq, 0, host, c)
+                    if u in ok_at and lmc > ok_at[u]
+                ), c)
             if cfg.reseed_after == c and cfg.reseed_k:
                 # C21 active re-crawl (the engine's reseed()): the k
                 # lexicographically-first seen URLs drop their old
@@ -487,21 +432,7 @@ class RefSim:
                 # frontier row) and re-inject as depth-0 discoveries
                 # with strictly-new seqs in lexicographic order —
                 # exactly the engine's reseed rank
-                victims = sorted(seen)[: cfg.reseed_k]
-                for u in victims:
-                    seen.pop(u, None)
-                    attempts.pop(u, None)
-                    queued.pop(u, None)
-                for u in victims:
-                    sp = urlsplit(u)
-                    host, path = sp.hostname, sp.path or "/"
-                    if host not in rules:
-                        continue
-                    if not robots_allowed(path, rules[host]):
-                        continue
-                    seen[u] = c
-                    seq += 1
-                    queued[u] = (0 + prio[host], seq, 0, host, c)
+                reinject(sorted(seen)[: cfg.reseed_k], c)
             if cfg.robots_revoke_after == c:
                 # C6 robots revision (the engine's update_politeness):
                 # the revoked hosts' NEW rules — compiled from the same

@@ -43,6 +43,28 @@ SITEMAP_J = -(10**9)
 
 
 @dataclass(frozen=True)
+class AdmissionCap:
+    """A stay-unseen admission cap (C23 / C38 / C40): a count cap with a
+    prior, first arrival wins. A novel URL is admitted only while its
+    scope's prior + earlier admissions stay under ``budget``; a capped
+    URL stays unseen (it counts as deduped and may re-candidate). The
+    engine applies it with one schedule.pattern_cap, the refsim with
+    one counter dict keyed by :meth:`scope_of`."""
+
+    budget: int
+    # ("host", "path") = URL pattern (C23), ("host",) = host (C38),
+    # ("pol_key",) = politeness bucket, pol_key_of_host (C40)
+    scope: tuple[str, ...]
+    # the append-only lifetime counter table the prior is summed from,
+    # or None: the prior is the pending ring at cycle start (C40)
+    counts: str | None
+
+    def scope_of(self, host: str, path: str, pol_key: str) -> tuple:
+        row = {"host": host, "path": path, "pol_key": pol_key}
+        return tuple(row[k] for k in self.scope)
+
+
+@dataclass(frozen=True)
 class GraphConfig:
     seed: int = 42
     n_sites: int = 5
@@ -72,16 +94,15 @@ class GraphConfig:
     # /cal?d=k+1 forever. pattern_budget caps lifetime frontier
     # admissions per (host, path) URL pattern (None = guard off; the
     # default graph has one URL per path, so any budget ≥ 1 leaves
-    # non-trap crawls bit-identical).
+    # non-trap crawls bit-identical). Read only through admission_cap().
     trap_hosts: int = 0
     pattern_budget: int | None = None
     # C38 (per-host lifetime page budget, Heritrix max-pages-per-host):
     # cap TOTAL frontier admissions per host — the site-budget control
     # that stops one mega-host from owning the crawl. Admission-side
     # like pattern_budget (a capped URL stays unseen and counts as
-    # deduped); NOT combinable with pattern_budget in one config (the
-    # sequential joint semantics aren't reproducible by two composed
-    # declarative caps — both engines refuse the combination).
+    # deduped); at most one admission cap per config — admission_cap()
+    # defines the rule and refuses combinations.
     host_page_budget: int | None = None
     # C39 (second-chance/clock frontier eviction): bound the PENDING
     # frontier to this many entries. After each cycle's merge, a clock
@@ -101,7 +122,8 @@ class GraphConfig:
     # every cycle; with slack S the next sweep fires only after ~S
     # novel admissions, amortizing the sweep's fixed cost over
     # ~S/novel-rate cycles. The cap invariant (pending ≤ cap after
-    # the merge) is unchanged. Must satisfy 0 ≤ slack < cap.
+    # the merge) is unchanged. Must satisfy 0 ≤ slack < cap (checked
+    # by admission_cap()).
     frontier_slack: int = 0
     # C40 (per-host frontier quota): bound each politeness BUCKET's
     # SHARE of the pending frontier — the bucket is the C33 politeness
@@ -116,8 +138,9 @@ class GraphConfig:
     # path (seeds + extracted links + redirect/canonical targets);
     # operator re-injections (reseed/revisit) bypass it by design.
     # Composable with frontier_cap (quota shapes the ring's per-host
-    # mix, the clock sweep bounds its total); NOT combinable with
-    # pattern_budget / host_page_budget (joint sequential accounting).
+    # mix, the clock sweep bounds its total); one of the three
+    # admission caps defined by admission_cap(), which refuses
+    # combining it with pattern_budget / host_page_budget.
     host_frontier_quota: int | None = None
     # redirect knob (C24): every redirect_every'th outlink (hash-picked
     # per (page, k)) is emitted as an ALIAS URL `/r{j}` on the target's
@@ -293,6 +316,38 @@ class GraphConfig:
     # schedule log and the refsim both record the effective score.
     # None = off: the drain key is byte-identical to before.
     priority_aging_every: int | None = None
+
+    # -- crawl policy --------------------------------------------------------
+
+    def admission_cap(self) -> AdmissionCap | None:
+        """The policy's one admission cap (None = uncapped), after
+        refusing an invalid policy with ValueError. The engine and the
+        refsim both call this; nothing else reads pattern_budget,
+        host_page_budget or host_frontier_quota. At most one cap may be
+        set: two composed declarative caps cannot reproduce the
+        sequential joint accounting (a row one cap rejects must not
+        consume the other's slot)."""
+        if self.frontier_cap is not None and not (
+            0 <= self.frontier_slack < self.frontier_cap
+        ):
+            raise ValueError("frontier_slack must satisfy 0 <= slack < cap")
+        caps = [
+            AdmissionCap(budget, scope, counts)
+            for budget, scope, counts in (
+                (self.pattern_budget, ("host", "path"), "pattern_counts"),
+                (self.host_page_budget, ("host",), "host_admissions"),
+                (self.host_frontier_quota, ("pol_key",), None),
+            )
+            if budget is not None
+        ]
+        if len(caps) > 1:
+            raise ValueError(
+                "pattern_budget, host_page_budget and host_frontier_quota "
+                "are not combinable"
+            )
+        if caps and caps[0].budget < 1:
+            raise ValueError("an admission budget must be >= 1")
+        return caps[0] if caps else None
 
     # -- topology ----------------------------------------------------------
 

@@ -207,19 +207,6 @@ def test_low_water_mark_variant(spark):
     assert pending.count() <= UNIT_CLOCKLW.frontier_cap
 
 
-def test_frontier_slack_validation(spark):
-    with pytest.raises(ValueError):
-        CrawlEngine(
-            spark,
-            EngineConfig(
-                graph=dataclasses.replace(
-                    UNIT_CLOCK, frontier_slack=UNIT_CLOCK.frontier_cap
-                ),
-                warehouse=tempfile.mkdtemp(),
-            ),
-        )
-
-
 def test_branch_from_equals_from_scratch(spark):
     """C22 ∘ C39: forking a completed UNIT_CLOCK crawl at the reseed
     cycle (CrawlEngine.branch_from) and continuing under UNIT_CLKRS

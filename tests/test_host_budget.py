@@ -7,8 +7,6 @@ import dataclasses
 from collections import Counter
 from urllib.parse import urlsplit
 
-import pytest
-
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.refsim import RefSim
 from crawlspark.synth import UNIT_HBUDGET, GraphConfig
@@ -48,12 +46,3 @@ def test_engine_matches_refsim_under_host_budget(spark):
     assert got == want
     got_seen = {r["url_norm"] for r in eng.seen_set().collect()}
     assert got_seen == set(ref.seen)
-
-
-def test_budgets_not_combinable(spark):
-    bad = GraphConfig(n_sites=2, max_pages=8, pattern_budget=3,
-                      host_page_budget=3)
-    with pytest.raises(ValueError):
-        RefSim(bad).run()
-    with pytest.raises(ValueError):
-        CrawlEngine(spark, EngineConfig(graph=bad, warehouse="/tmp/x-never"))

@@ -11,8 +11,6 @@ from __future__ import annotations
 import dataclasses
 import tempfile
 
-import pytest
-
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.refsim import RefSim
 from crawlspark.synth import UNIT_QCLK, UNIT_QUOTA
@@ -118,14 +116,3 @@ def test_domain_keyed_quota(spark):
     assert all(
         n <= UNIT_QDOM.host_frontier_quota for n in per_bucket.values()
     )
-
-
-def test_quota_not_combinable_with_budgets(spark):
-    for field in ("pattern_budget", "host_page_budget"):
-        cfg = dataclasses.replace(UNIT_QUOTA, **{field: 3})
-        with pytest.raises(ValueError):
-            CrawlEngine(
-                spark, EngineConfig(graph=cfg, warehouse=tempfile.mkdtemp())
-            )
-        with pytest.raises(ValueError):
-            RefSim(cfg).run()

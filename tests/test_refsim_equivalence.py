@@ -8,9 +8,8 @@ refsim, same seed list + politeness budget.
 import pytest
 
 from crawlspark.engine import CrawlEngine, EngineConfig
+from crawlspark.refsim import RefSim
 from crawlspark.synth import UNIT
-
-from .refsim import RefSim
 
 ORDER_COLS = [
     "cycle_id", "batch_pos", "url_norm", "host", "score", "seq",

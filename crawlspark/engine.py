@@ -196,11 +196,39 @@ class CrawlEngine:
         asserted against the sequential twin in
         tests/test_clock_eviction.py (q155's UNIT_CLKRS runs this way:
         its pre-reseed cycles ARE UNIT_CLOCK's, so the harness forks
-        the shared crawl instead of re-crawling four cycles)."""
+        the shared crawl instead of re-crawling four cycles).
+
+        Only a valid continuation is accepted (ValueError otherwise):
+        ``cfg`` may differ from the base's config in the warehouse and
+        in mid-crawl script steps (synth.SCRIPT) that neither side has
+        run by the fork — the base's after ``cycle_id``, the fork's at
+        or after it."""
         import re
         import shutil
+        from dataclasses import replace
         from pathlib import Path
 
+        from .synth import SCRIPT
+
+        a, b = base.cfg.graph, cfg.graph
+        if replace(base.cfg, graph=a.without_script()) != replace(
+            cfg, graph=b.without_script(), warehouse=base.cfg.warehouse
+        ):
+            raise ValueError(
+                "a fork may differ from its base only in the warehouse"
+                " and the mid-crawl script"
+            )
+        for step, after, arg in SCRIPT:
+            if all(getattr(a, f) == getattr(b, f) for f in (after, arg) if f):
+                continue
+            ca, cb = getattr(a, after), getattr(b, after)
+            if (ca is not None and ca <= cycle_id) or (
+                cb is not None and cb < cycle_id
+            ):
+                raise ValueError(
+                    f"a fork at cycle {cycle_id} changes the {step} step,"
+                    f" due after cycle {ca} in the base and {cb} in the fork"
+                )
         src, dst = Path(base.cfg.warehouse), Path(cfg.warehouse)
         target = base.cat.snapshot_for_cycle(cycle_id)
         if target is None:
@@ -210,7 +238,7 @@ class CrawlEngine:
         for p in (dst / "snapshots").glob("s*.json"):
             if int(p.stem[1:]) > fork_id:
                 p.unlink()
-        pat = re.compile(r"^s(\d{6})-\d+$")
+        pat = re.compile(r"^s(\d{6,})-\d+$")
         for d in sorted((dst / "data").glob("*/s*")):
             m = pat.match(d.name)
             if m and int(m.group(1)) > fork_id:

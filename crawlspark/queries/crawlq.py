@@ -1,69 +1,141 @@
 """Crawl-engine queries — the core frontier/scheduler semantics.
 
 The crawl tables are not in the driver's DuckDB view set, but every
-query here is deterministic over the UNIT graph, so each gets a REAL
-driver-checked oracle: `build_oracle` runs the pure-Python refsim
-(crawlspark/refsim.py — beanstalkd drain semantics, no Spark) at
+query here is deterministic over a synthetic graph preset, so each gets
+a REAL oracle: `build_oracle` runs the pure-Python
+refsim (crawlspark/refsim.py — beanstalkd drain semantics, no Spark) at
 ``oracle_sql()`` call time, writes its expected rows to parquet, and
 emits ``read_parquet`` SQL (crawl_oracle.py). The driver's
 rows/schema/value-hash comparison then checks the engine against the
 reference semantics directly — ordering, URL-seen set, span
 signatures, per-cycle counters, media features, PageRank.
 
-One UNIT-config crawl runs per process (memoized) in a tmp warehouse;
-all four queries read its committed snapshot tables.
+One table, ``CRAWLS``, names each query's preset, its oracle table and
+its body; ``QUERIES`` and ``build_oracle`` both read it. Every body
+reads the finished crawl that ``scenario`` runs once per (preset,
+sidecar) and process in a tmp warehouse.
 """
 
 from __future__ import annotations
 
+import functools
 import tempfile
+from collections.abc import Callable
+from dataclasses import replace
+from typing import NamedTuple
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import CrawlEngine, EngineConfig
 from ..portable import md5hash60
-from ..synth import UNIT, UNIT_REDIR, UNIT_TRAP
+from ..synth import (
+    UNIT, UNIT_AGING, UNIT_ANCHOR, UNIT_CANON, UNIT_CLKRS, UNIT_CLOCK,
+    UNIT_CLOCKLW, UNIT_COND, UNIT_DELAY, UNIT_DOMGROUP, UNIT_HBUDGET,
+    UNIT_MEDIA, UNIT_META, UNIT_MIRROR, UNIT_QCLK, UNIT_QDOM, UNIT_QUOTA,
+    UNIT_REDIR, UNIT_RESEED, UNIT_REV, UNIT_ROBREV, UNIT_SCOPE,
+    UNIT_SMAP, UNIT_SMAPIDX, UNIT_SMLASTMOD, UNIT_TRAP, GraphConfig,
+)
 
-_ENGINE_CACHE: dict[str, CrawlEngine] = {}
+_CACHE: dict[tuple[GraphConfig, str], CrawlEngine] = {}
 
 
-def _engine(spark, sidecar: str = "bloom") -> CrawlEngine:
+def scenario(spark, g: GraphConfig, sidecar: str = "bloom") -> CrawlEngine:
+    """The finished crawl of ``g`` with the ``sidecar`` seen filter,
+    memoized per (g, sidecar). Runs g's mid-crawl script
+    (GraphConfig.script — the steps RefSim.run applies, in its order),
+    crawling up to each step's cycle first. When g without its script
+    is a preset of ``CRAWLS``, the crawl is a ``branch_from`` fork of
+    that preset's crawl at the first step's cycle instead of a re-crawl
+    of the shared prefix (UNIT_CLKRS forks UNIT_CLOCK)."""
     from . import pin_session
 
     pin_session(spark)
-    key = f"unit-{sidecar}"
-    if key not in _ENGINE_CACHE:
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(
-            spark,
-            EngineConfig(graph=UNIT, warehouse=wh, seen_sidecar=sidecar,
-                         # small parts keep the UNIT sidecar tiny; the
-                         # fill level is irrelevant to the contract
-                         cuckoo_nbuckets=1 << 10),
+    key = (g, sidecar)
+    if key not in _CACHE:
+        cfg = EngineConfig(
+            graph=g, warehouse=tempfile.mkdtemp(prefix="crawlspark-q-"),
+            seen_sidecar=sidecar,
+            # small parts keep the UNIT cuckoo sidecar tiny; the fill
+            # level is irrelevant to the contract (bloom ignores it)
+            cuckoo_nbuckets=1 << 10,
         )
+        script = g.script()
+        base = g.without_script()
+        if script and base in {c.preset for c in CRAWLS.values()}:
+            eng = CrawlEngine.branch_from(
+                scenario(spark, base, sidecar), script[0][0], cfg
+            )
+        else:
+            eng = CrawlEngine(spark, cfg)
+        for cycle, step, arg in script:
+            eng.run(max_cycles=cycle)
+            _STEPS[step](eng, arg)
         eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
+        _CACHE[key] = eng
+    return _CACHE[key]
 
 
-def q80_crawl_order(spark, sf):
-    """The crawl-ordering contract: scheduled URLs in execution order."""
-    return _engine(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score", "seq", "depth", "attempt", "ok"
+def _lex_first(eng: CrawlEngine, k: int) -> list[str]:
+    """The k lexicographically-first seen URLs (the scripted victims)."""
+    return [
+        r["url_norm"]
+        for r in eng.seen_set().orderBy("url_norm").limit(k).collect()
+    ]
+
+
+def _robots_revoked(eng: CrawlEngine, n_hosts: int) -> DataFrame:
+    """host_config with the first n_hosts hosts re-publishing robots.txt
+    as deny-all — rules compiled from the SAME text the refsim compiles
+    (synth.revoked_robots_txt — one source)."""
+    from ..robots import parse_robots
+
+    g = eng.cfg.graph
+    rules, _delay = parse_robots(g.revoked_robots_txt())
+    arr = F.array(*[
+        F.struct(
+            F.lit(r["allow"]).alias("allow"),
+            F.lit(r["prefix"]).alias("prefix"),
+            F.lit(r["pattern"]).cast("string").alias("pattern"),
+            F.lit(r["spec"]).alias("spec"),
+        )
+        for r in rules
+    ])
+    revoked = [g.host(i) for i in range(n_hosts)]
+    return eng.cat.read("host_config").withColumn(
+        "robots_rules",
+        F.when(F.col("host").isin(revoked), arr).otherwise(F.col("robots_rules")),
     )
 
 
-def q81_crawl_seen(spark, sf):
-    """Final URL-seen set (exact table; Bloom sidecar is a prefilter)."""
-    return _engine(spark).seen_set().select("url_norm", "first_cycle")
+# synth.SCRIPT step -> how the engine runs it with the step's argument
+_STEPS = {
+    "revisit": lambda eng, min_age: eng.revisit(min_age),
+    "revisit_from_sitemaps": lambda eng, _: eng.revisit_from_sitemaps(),
+    "reseed": lambda eng, k: eng.reseed(_lex_first(eng, k)),
+    "update_politeness": lambda eng, n: eng.update_politeness(
+        _robots_revoked(eng, n)
+    ),
+}
 
 
-def q82_crawl_docs(spark, sf):
-    """Fetched documents with a span-sequence signature — the
+# -- query bodies: body(engine) -> DataFrame -----------------------------------
+
+
+def _order(eng):
+    """The crawl-ordering contract: every fetch attempt in execution
+    order, with its score, seq, depth, attempt number and outcome."""
+    return eng.crawl_order().select(
+        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
+        "seq", "depth", "attempt", "ok"
+    )
+
+
+def _docs(eng):
+    """Stored documents with a span-sequence signature — the
     input_hint per-row invariant (kind, text, media_ref, order) as one
     hashable column."""
-    docs = _engine(spark).documents()
-    return docs.select(
+    return eng.documents().select(
         "doc_id",
         "fetch_cycle",
         F.size("spans").alias("n_spans"),
@@ -72,11 +144,10 @@ def q82_crawl_docs(spark, sf):
     )
 
 
-def q83_crawl_metrics(spark, sf):
+def _metrics(eng):
     """Per-cycle lineage rollup from the per-partition metrics table."""
-    m = _engine(spark).cat.read("metrics")
     return (
-        m.filter(F.col("part") >= 0)
+        eng.cat.read("metrics").filter(F.col("part") >= 0)
         .groupBy("cycle_id")
         .agg(
             F.sum("urls_in").alias("urls_in"),
@@ -87,77 +158,68 @@ def q83_crawl_metrics(spark, sf):
     )
 
 
-def q84_media_features(spark, sf):
+def _media_features(eng):
     """Multimodal pipeline over the crawl's media spans: explode refs →
-    fetch blobs → decode (stubbed) features (crawlspark/multimodal.py).
-    Rows-only: the blob path is not SQL-expressible."""
+    fetch blobs → decode (stubbed) features (crawlspark/multimodal.py)."""
     from .. import multimodal as M
 
-    docs = _engine(spark).documents()
-    return M.media_pipeline(docs).select(
+    return M.media_pipeline(eng.documents()).select(
         "media_ref", "doc_id", "kind", "n_bytes", "width", "height", "n_frames", "decoder"
     )
 
 
-def q86_frame_sample(spark, sf):
+def _frame_sample(eng):
     """Multimodal frame-sampling plan (P14 tail stage): every 4th
     frame index of each non-image asset, as pure JVM explode over the
-    decoded n_frames. Oracle: refsim-generated (crawl_oracle.py)."""
+    decoded n_frames."""
     from .. import multimodal as M
 
-    docs = _engine(spark).documents()
-    return M.frame_sample(M.media_pipeline(docs), every_n=4)
+    return M.frame_sample(M.media_pipeline(eng.documents()), every_n=4)
 
 
-def q85_pagerank(spark, sf):
-    """Iterative PageRank over the crawl's discovered link graph
-    (parent doc → discovered URL), 10 damped iterations. Rows-only:
-    verified against numpy power iteration in tests/test_graph.py."""
+def _edges(eng):
+    """The crawl's discovered link graph (parent doc → discovered URL)."""
+    return eng.cat.read("edges").select("src", "dst").distinct()
+
+
+def _pagerank(eng):
+    """Iterative PageRank over the discovered link graph, 6 damped
+    iterations (numpy power iteration check in tests/test_graph.py)."""
     from ..operators import graph
 
-    edges = (
-        _engine(spark).cat.read("edges").select("src", "dst").distinct()
-    )
-    return graph.pagerank(edges, damping=0.85, iterations=6)
+    return graph.pagerank(_edges(eng), damping=0.85, iterations=6)
 
 
-def q136_hits(spark, sf):
-    """P51 — Kleinberg HITS over the crawl's discovered link graph:
-    hub scores (directory/index pages worth fanning out from) and
-    authority scores (pages worth fetch-priority), the classic
-    complement to q85's PageRank for frontier scoring — authorities
-    feed C8 priority like q77, hubs feed link-extraction budget.
-    Oracle: refsim dict twin (crawl_oracle._hits), identical linear
-    updates + one final L1 norm, round-6."""
+def _hits(eng):
+    """P51 — Kleinberg HITS over the discovered link graph: hub scores
+    (directory/index pages worth fanning out from) and authority scores
+    (pages worth fetch-priority), the classic complement to q85's
+    PageRank for frontier scoring. Oracle: refsim dict twin
+    (crawl_oracle._hits), identical linear updates + one final L1
+    norm, round-6."""
     from ..operators import graph
 
-    edges = (
-        _engine(spark).cat.read("edges").select("src", "dst").distinct()
-    )
-    return graph.hits(edges, iterations=6)
+    return graph.hits(_edges(eng), iterations=6)
 
 
-def q138_link_distance(spark, sf):
+def _link_distance(eng):
     """P53 — BFS min-hop distance from the depth-0 seed fetches over
-    the discovered link graph: the crawl-QA signal comparing TRUE
-    link distance against discovery depth (starvation audit) and the
-    standard distance-from-seed quality feature. Frontier-based BFS
-    (operators/graph.bfs_distances), integer-exact. Oracle: refsim
+    the discovered link graph: the crawl-QA signal comparing TRUE link
+    distance against discovery depth (starvation audit). Frontier-based
+    BFS (operators/graph.bfs_distances), integer-exact. Oracle: refsim
     level-synchronous BFS twin (crawl_oracle._bfs)."""
     from ..operators import graph
 
-    eng = _engine(spark)
-    edges = eng.cat.read("edges").select("src", "dst").distinct()
     seeds = (
         eng.crawl_order()
         .filter(F.col("depth") == 0)
         .select(F.col("url_norm").alias("id"))
         .distinct()
     )
-    return graph.bfs_distances(edges, seeds)
+    return graph.bfs_distances(_edges(eng), seeds)
 
 
-def q77_priority_feedback(spark, sf):
+def _priority_feedback(eng):
     """PageRank-fed priority refresh (the quality feedback loop into
     C8 scoring): host authority = its best page's damped rank — max,
     not sum, because max is float-addition-order-insensitive and so
@@ -169,11 +231,8 @@ def q77_priority_feedback(spark, sf):
     never funnel one window task)."""
     from ..operators import graph, schedule
 
-    edges = (
-        _engine(spark).cat.read("edges").select("src", "dst").distinct()
-    )
     hosts = (
-        graph.pagerank(edges, damping=0.85, iterations=6)
+        graph.pagerank(_edges(eng), damping=0.85, iterations=6)
         .withColumn("host", F.parse_url("id", F.lit("HOST")))
         .groupBy("host")
         .agg(F.max("rank").alias("pr_max"))
@@ -195,41 +254,82 @@ def q77_priority_feedback(spark, sf):
     )
 
 
-def q87_cuckoo_seen(spark, sf):
-    """The same crawl run with the CUCKOO seen-sidecar (EngineConfig
-    seen_sidecar='cuckoo', operators/cuckoo.py) must land the exact
-    URL-seen set the refsim predicts — the bloom/cuckoo half of the
-    north rule checked through the driver's harness. Oracle: identical
-    expectation table to q81 (the sidecar choice must not change the
-    engine's output)."""
-    return _engine(spark, "cuckoo").seen_set().select("url_norm", "first_cycle")
+def _backoff(eng):
+    """C27 adaptive politeness backoff: per-host failure rate over the
+    attempt log and the next token cap by exact rule (≥ 1/4 failed →
+    halve, floor 1.0); the refsim recomputes the same rates from its
+    own order log and the shared per-host capacities."""
+    from ..operators import politeness
+
+    return politeness.backoff_caps(
+        eng.cat.read("scheduled"), eng.cat.read("host_config")
+    )
 
 
-def _engine_trap(spark) -> CrawlEngine:
-    """UNIT_TRAP crawl: calendar traps on two hosts (unbounded /cal?d=N
-    chains), C23 pattern budget = 3 admissions per (host, path)."""
-    from . import pin_session
+@functools.cache
+def _forgotten(eng: CrawlEngine) -> CrawlEngine:
+    """A fork of ``eng`` at its last committed cycle (the shared crawl
+    stays untouched) with the 5 lexicographically-first seen URLs
+    forgotten."""
+    last = eng.cat.current_snapshot()["cycle_id"]
+    fork = CrawlEngine.branch_from(
+        eng, last,
+        replace(eng.cfg, warehouse=tempfile.mkdtemp(prefix="crawlspark-q-")),
+    )
+    assert fork.forget(_lex_first(fork, 5))["forgotten"] == 5
+    return fork
 
-    pin_session(spark)
-    key = "unit-trap"
-    if key not in _ENGINE_CACHE:
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_TRAP, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
+
+def _forget_recrawl(eng):
+    """forget() through the driver's harness: after forgetting the 5
+    lexicographically-first seen URLs (cuckoo sidecar: in-place
+    fingerprint deletes + exact-row removal in one atomic commit), the
+    seen set must equal the refsim expectation minus exactly those
+    keys. Oracle: q81's table with the same ORDER BY/LIMIT exclusion
+    in pure SQL."""
+    return _forgotten(eng).seen_set()
 
 
-def q67_trap_guard(spark, sf):
-    """C23 crawler-trap guard through the driver's harness: per-(host,
-    path) rollup of the trap crawl's final seen set. The /cal patterns
-    must pin at exactly pattern_budget (3) — unguarded they'd take 8+
-    admissions by cycle 6 and grow without bound — while every regular
-    pattern keeps its one URL. Oracle: the refsim runs the same budget
-    counter sequentially and predicts every row (crawl_oracle.py)."""
-    s = _engine_trap(spark).seen_set()
+def _time_travel(eng):
+    """Snapshot time travel (C16 lineage): url_seen read pinned to the
+    cycle-3 snapshot must equal the refsim seen set restricted to
+    first_cycle <= 3 — every later discovery invisible, every earlier
+    one present. Oracle: q81's table filtered in SQL."""
+    snap = eng.cat.snapshot_for_cycle(3)
+    return eng.cat.read("url_seen", snap).select("url_norm", "first_cycle")
+
+
+def _snapshot_diff(eng):
+    """C22 extension — CDC-style incremental consumption: the url_seen
+    rows ADDED between the cycle-2 and cycle-4 snapshots, as an
+    anti-join of two pinned snapshot reads of the same table. This is
+    the poll a downstream trainer runs ("everything new since my last
+    sync") without ever scanning history logs; both reads are pinned,
+    so the result is stable no matter what later cycles or forget()
+    calls do to the live table. Oracle: q81's expectation filtered to
+    2 < first_cycle <= 4 (append-only monotone discovery)."""
+    s2 = eng.cat.snapshot_for_cycle(2)
+    s4 = eng.cat.snapshot_for_cycle(4)
     return (
-        s.withColumn("host", F.parse_url(F.col("url_norm"), F.lit("HOST")))
+        eng.cat.read("url_seen", s4)
+        .join(
+            eng.cat.read("url_seen", s2).select("url_norm"),
+            "url_norm",
+            "left_anti",
+        )
+        .select("url_norm", "first_cycle")
+    )
+
+
+def _trap_guard(eng):
+    """C23 crawler-trap guard: per-(host, path) rollup of the trap
+    crawl's final seen set. The /cal patterns must pin at exactly
+    pattern_budget (3) — unguarded they'd take 8+ admissions by cycle 6
+    and grow without bound — while every regular pattern keeps its one
+    URL. The refsim runs the same budget counter sequentially."""
+    return (
+        eng.seen_set()
+        .withColumn("host", F.parse_url(F.col("url_norm"), F.lit("HOST")))
         .withColumn(
             "path",
             F.coalesce(
@@ -244,74 +344,41 @@ def q67_trap_guard(spark, sf):
     )
 
 
-def _engine_redir(spark) -> CrawlEngine:
-    """UNIT_REDIR crawl: every 3rd outlink is a /r{j} short-link alias
-    that 301s to the canonical page (C24)."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-redir"
-    if key not in _ENGINE_CACHE:
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_REDIR, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q68_redirects(spark, sf):
-    """C24 redirect handling through the driver's harness: the hop log
-    (alias → canonical Location, hop cycle) joined with when the target
-    entered the seen set (-1 = never admitted: a 301 into /private dies
-    at robots, or the target was capped). Any admission/ordering
-    divergence under redirects shifts the map or the first_cycle
-    column; the refsim replays the same 301 semantics sequentially
-    (crawl_oracle.py)."""
-    eng = _engine_redir(spark)
-    seen = eng.seen_set().select(
-        F.col("url_norm").alias("dst"), "first_cycle"
-    )
-    return (
-        eng.redirect_map()
-        .join(seen, "dst", "left")
-        .select(
-            "src", "dst", "cycle_id",
-            F.coalesce("first_cycle", F.lit(-1)).cast("long")
-            .alias("dst_first_cycle"),
-        )
+def _with_dst_first_cycle(eng, hops):
+    """(src, dst, cycle_id) hops joined with when the target entered
+    the seen set (-1 = never admitted)."""
+    seen = eng.seen_set().select(F.col("url_norm").alias("dst"), "first_cycle")
+    return hops.join(seen, "dst", "left").select(
+        "src", "dst", "cycle_id",
+        F.coalesce("first_cycle", F.lit(-1)).cast("long").alias("dst_first_cycle"),
     )
 
 
-def _engine_revisit(spark) -> CrawlEngine:
-    """UNIT_REV scenario: versioned content, 6 discovery cycles, a
-    freshness revisit (min_age per the config), then cycles 7-9
-    re-fetch the stale URLs — new document versions land."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-rev"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_REV
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_REV, warehouse=wh))
-        eng.run(max_cycles=UNIT_REV.revisit_after)
-        eng.revisit(UNIT_REV.revisit_min_age)
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
+def _redirects(eng):
+    """C24 redirect handling: the hop log (alias → canonical Location,
+    hop cycle) with when the target entered the seen set (-1: a 301
+    into /private dies at robots, or the target was capped). Any
+    admission/ordering divergence under redirects shifts the map or
+    the first_cycle column."""
+    return _with_dst_first_cycle(eng, eng.redirect_map())
 
 
-def q71_revisit_versions(spark, sf):
-    """C25 freshness re-crawl through the driver's harness: per-doc
-    version history after the scripted revisit — version count,
-    distinct content signatures (changed iff > 1), first/last fetch
-    cycle. The refsim replays the same revisit (forget + lexicographic
-    depth-0 reseed) and versioned page generator sequentially; any
+def _canonicals(eng):
+    """C37's identity map: every honored (variant → declared
+    canonical) hop with whether/when the canonical entered the seen
+    set (-1 = killed at admission) — the q68 redirect-map shape for
+    the duplicate-URL collapse consumers."""
+    return _with_dst_first_cycle(eng, eng.cat.read("canonicals"))
+
+
+def _versions(eng):
+    """C25 freshness re-crawl: per-doc version history after the
+    scripted revisit — version count, distinct content signatures
+    (changed iff > 1), first/last fetch cycle. Under C32 conditional
+    fetch an unchanged re-fetch is a 304 and mints no version. Any
     divergence in WHO was re-queued or WHAT content landed shifts a
-    row (crawl_oracle.py)."""
-    docs = _engine_revisit(spark).documents()
-    return docs.groupBy("doc_id").agg(
+    row."""
+    return eng.documents().groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_versions"),
         F.countDistinct(md5hash60(F.to_json("spans")))
         .cast("long").alias("n_distinct_sigs"),
@@ -320,20 +387,16 @@ def q71_revisit_versions(spark, sf):
     )
 
 
-def q72_change_rates(spark, sf):
-    """C25's adaptive layer through the driver's harness: per-host
-    change rate over the re-fetched docs and the next revisit interval
-    by integer-threshold rule (≥1/2 changed → halve, ≤1/5 → double,
-    else keep) — the estimator a freshness-aware scheduler feeds back
-    into revisit(min_age)."""
-    from ..synth import UNIT_REV
-
-    docs = _engine_revisit(spark).documents()
-    per_doc = docs.groupBy("doc_id", "host").agg(
+def _change_rates(eng):
+    """C25's adaptive layer: per-host change rate over the re-fetched
+    docs and the next revisit interval by integer-threshold rule (≥1/2
+    changed → halve, ≤1/5 → double, else keep) — the estimator a
+    freshness-aware scheduler feeds back into revisit(min_age)."""
+    per_doc = eng.documents().groupBy("doc_id", "host").agg(
         F.count("*").alias("nv"),
         F.countDistinct(md5hash60(F.to_json("spans"))).alias("nd"),
     )
-    base = UNIT_REV.revisit_min_age
+    base = eng.cfg.graph.revisit_min_age
     return (
         per_doc.filter(F.col("nv") > 1)
         .groupBy("host")
@@ -353,398 +416,7 @@ def q72_change_rates(spark, sf):
     )
 
 
-def _engine_smap(spark) -> CrawlEngine:
-    """UNIT_SMAP crawl: every other host publishes /sitemap.xml (C26);
-    sitemap seeds fetch under normal politeness and their <loc>
-    children — orphans included — enter at depth 1."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-smap"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_SMAP
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_SMAP, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q73_sitemap_seen(spark, sf):
-    """C26 sitemap ingestion through the driver's harness: the final
-    seen set of the sitemap-enabled crawl. Divergence in sitemap
-    fetch ordering, <loc> extraction, or child admission (orphan pages
-    have no other route in) shifts rows; the refsim replays the same
-    seeds and shared extraction regex sequentially."""
-    return _engine_smap(spark).seen_set()
-
-
-def _engine_reseed(spark) -> CrawlEngine:
-    """UNIT_RESEED scenario: 4 discovery cycles, then the 5
-    lexicographically-first seen URLs are actively re-crawled via
-    reseed() (forget + depth-0 re-inject), then cycles 5-10 run."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-reseed"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_RESEED
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_RESEED, warehouse=wh))
-        eng.run(max_cycles=UNIT_RESEED.reseed_after)
-        victims = [
-            r["url_norm"]
-            for r in eng.seen_set().orderBy("url_norm")
-            .limit(UNIT_RESEED.reseed_k).collect()
-        ]
-        assert eng.reseed(victims)["reseeded"] == UNIT_RESEED.reseed_k
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q78_reseed(spark, sf):
-    """C21 active re-crawl through the driver's harness: the FULL
-    fetch-attempt order of the reseed scenario. The reseeded URLs must
-    drop their old identity, re-enter at depth 0 with strictly-new
-    seqs assigned in lexicographic order, compete under normal
-    (score, seq) scheduling and politeness caps, and retry from
-    attempt 1 — any divergence shifts a row. Oracle: the refsim
-    replays the same scripted reseed sequentially (crawl_oracle.py
-    over UNIT_RESEED)."""
-    return _engine_reseed(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host",
-        "score", "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_smlastmod(spark) -> CrawlEngine:
-    """UNIT_SMLASTMOD scenario: sitemaps with <lastmod> + versioned
-    content, 6 discovery cycles, then revisit_from_sitemaps() —
-    re-fetch the stored sitemaps, re-queue exactly the listed urls
-    whose fresh lastmod beats their last successful fetch — and
-    cycles 7-9 fetch the dues."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-smlastmod"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_SMLASTMOD
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_SMLASTMOD, warehouse=wh))
-        eng.run(max_cycles=UNIT_SMLASTMOD.sitemap_revisit_after)
-        eng.revisit_from_sitemaps()
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q122_sitemap_revisit(spark, sf):
-    """C25∘C26 through the driver's harness: sitemap-lastmod-driven
-    selective revisit. The full fetch-attempt order must match the
-    refsim replaying the same script — the due set (listed AND
-    re-published since last fetch, nothing else), the lexicographic
-    reseed seqs, and the post-revisit (score, seq) competition.
-    Oracle: the UNIT_SMLASTMOD refsim's q80 expectation table."""
-    return _engine_smlastmod(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host",
-        "score", "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_smapidx(spark) -> CrawlEngine:
-    """UNIT_SMAPIDX crawl: sitemaps declared via robots.txt `Sitemap:`
-    directives (no operator sitemap seeds) and shaped as nested
-    <sitemapindex> → /sitemap-{k}.xml children → page <urlset>s."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-smapidx"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_SMAPIDX
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_SMAPIDX, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q79_sitemap_index(spark, sf):
-    """C26 extension through the driver's harness: the final seen set
-    of the robots-declared nested-sitemap crawl. Divergence in the
-    `Sitemap:` directive parse (robots.parse_sitemaps), the
-    <sitemapindex> fan-out, or child-<urlset> admission (orphan pages
-    have no other route in) shifts rows; the refsim replays the same
-    seeds and shared <loc> extraction sequentially."""
-    return _engine_smapidx(spark).seen_set()
-
-
-def q76_backoff(spark, sf):
-    """C27 adaptive politeness backoff through the driver's harness:
-    per-host failure rate over the UNIT crawl's attempt log and the
-    next token cap by exact rule (≥ 1/4 failed → halve, floor 1.0).
-    Reuses the memoized UNIT engine; the refsim recomputes the same
-    rates from its own order log and the shared per-host capacities."""
-    from ..operators import politeness
-
-    eng = _engine(spark)
-    return politeness.backoff_caps(
-        eng.cat.read("scheduled"), eng.cat.read("host_config")
-    )
-
-
-def _engine_forgotten(spark) -> CrawlEngine:
-    """UNIT crawl (cuckoo sidecar) with the 5 lexicographically-first
-    seen URLs forgotten after completion — memoized post-forget."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-forget"
-    if key not in _ENGINE_CACHE:
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(
-            spark,
-            EngineConfig(graph=UNIT, warehouse=wh, seen_sidecar="cuckoo",
-                         cuckoo_nbuckets=1 << 10),
-        )
-        eng.run()
-        victims = [
-            r["url_norm"]
-            for r in eng.seen_set().orderBy("url_norm").limit(5).collect()
-        ]
-        assert eng.forget(victims)["forgotten"] == 5
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q88_forget_recrawl(spark, sf):
-    """forget() through the driver's harness: after forgetting the 5
-    lexicographically-first seen URLs (cuckoo sidecar: in-place
-    fingerprint deletes + exact-row removal in one atomic commit), the
-    seen set must equal the refsim expectation minus exactly those
-    keys. Oracle: q81's table with the same ORDER BY/LIMIT exclusion
-    in pure SQL."""
-    return _engine_forgotten(spark).seen_set().select("url_norm", "first_cycle")
-
-
-def q89_time_travel(spark, sf):
-    """Snapshot time travel (C16 lineage): url_seen read pinned to the
-    cycle-3 snapshot must equal the refsim seen set restricted to
-    first_cycle <= 3 — every later discovery invisible, every earlier
-    one present. Oracle: q81's table filtered in SQL."""
-    eng = _engine(spark)
-    snap = eng.cat.snapshot_for_cycle(3)
-    return eng.cat.read("url_seen", snap).select("url_norm", "first_cycle")
-
-
-def q101_snapshot_diff(spark, sf):
-    """C22 extension — CDC-style incremental consumption: the url_seen
-    rows ADDED between the cycle-2 and cycle-4 snapshots, as an
-    anti-join of two pinned snapshot reads of the same table. This is
-    the poll a downstream trainer runs ("everything new since my last
-    sync") without ever scanning history logs; both reads are pinned,
-    so the result is stable no matter what later cycles or forget()
-    calls do to the live table. Oracle: q81's expectation filtered to
-    2 < first_cycle <= 4 (append-only monotone discovery)."""
-    eng = _engine(spark)
-    s2 = eng.cat.snapshot_for_cycle(2)
-    s4 = eng.cat.snapshot_for_cycle(4)
-    return (
-        eng.cat.read("url_seen", s4)
-        .join(
-            eng.cat.read("url_seen", s2).select("url_norm"),
-            "url_norm",
-            "left_anti",
-        )
-        .select("url_norm", "first_cycle")
-    )
-
-
-def _engine_robrev(spark) -> CrawlEngine:
-    """UNIT_ROBREV scenario: crawl cycles 1-3, then host 0 re-publishes
-    robots.txt as deny-all (the C6 cache-TTL refresh) — applied through
-    CrawlEngine.update_politeness as one atomic commit — and the crawl
-    RESUMES through the normal checkpoint path (C16) for cycles 4-8."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-robrev"
-    if key not in _ENGINE_CACHE:
-        from ..robots import parse_robots
-        from ..synth import UNIT_ROBREV
-
-        g = UNIT_ROBREV
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=g, warehouse=wh))
-        eng.run(max_cycles=g.robots_revoke_after)
-        # the revised rules: compiled from the SAME re-published text
-        # the refsim compiles (synth.revoked_robots_txt — one source)
-        rules, _delay = parse_robots(g.revoked_robots_txt())
-        arr = F.array(*[
-            F.struct(
-                F.lit(r["allow"]).alias("allow"),
-                F.lit(r["prefix"]).alias("prefix"),
-                F.lit(r["pattern"]).cast("string").alias("pattern"),
-                F.lit(r["spec"]).alias("spec"),
-            )
-            for r in rules
-        ])
-        revoked = [g.host(i) for i in range(g.robots_revoke_hosts)]
-        hc = eng.cat.read("host_config")
-        hc2 = hc.withColumn(
-            "robots_rules",
-            F.when(F.col("host").isin(revoked), arr).otherwise(
-                F.col("robots_rules")
-            ),
-        )
-        eng.update_politeness(hc2)
-        eng.run()  # resume at cycle 4 from the politeness-update commit
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q104_robots_revision(spark, sf):
-    """C6 extension through the driver's harness: mid-crawl robots
-    revision (cache-TTL refresh). The full fetch-attempt order must
-    match the refsim replaying the same script — every attempt on the
-    revoked host at cycle ≤ 3, queued URLs pruned exactly once, the
-    survivors' (score, seq) ordering untouched, and zero
-    post-revision admissions on that host. Oracle: the UNIT_ROBREV
-    refsim's q80 expectation table (crawl_oracle.py)."""
-    return _engine_robrev(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_scope(spark) -> CrawlEngine:
-    """UNIT_SCOPE crawl: Scrapy-style crawl-scope controls — depth
-    capped at 2 from the seeds (C29) and pages /p10–/p19 denied by URL
-    pattern (C30), both enforced at the admission point."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-scope"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_SCOPE
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_SCOPE, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q108_crawl_scope(spark, sf):
-    """C29 (depth cap) + C30 (URL deny patterns) through the driver's
-    harness: the full fetch-attempt order of the scoped crawl must
-    match the refsim applying the same rules at its admission point —
-    no attempt deeper than 2, no /p1N page ever scheduled, and the
-    surviving frontier's (score, seq) competition identical. Unscoped,
-    this graph crawls to depth 3 and 15 more attempts — the scope
-    rules, not the cycle budget, are what bound it. Oracle: the
-    UNIT_SCOPE refsim's q80 table (crawl_oracle.py)."""
-    return _engine_scope(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_delay(spark) -> CrawlEngine:
-    """UNIT_DELAY crawl: token refill derived from each host's
-    declared robots Crawl-delay (C31) instead of the synthetic config
-    rate — the crawl-delay → token-bucket linkage."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-delay"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_DELAY
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_DELAY, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q109_delay_politeness(spark, sf):
-    """C31 through the driver's harness: with delay_driven_refill on,
-    each host's per-cycle token refill is floor(cycle_duration /
-    its declared robots Crawl-delay) — politeness paced by what the
-    HOST published, not a synthetic rate. The full fetch-attempt
-    order must match the refsim accumulating the same derived rates
-    (it differs from the UNIT baseline order, so the linkage is what
-    this checks, not a replay of q80). Oracle: the UNIT_DELAY
-    refsim's q80 table (crawl_oracle.py)."""
-    return _engine_delay(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_cond(spark) -> CrawlEngine:
-    """UNIT_COND scenario: the UNIT_REV versioned-content + freshness
-    re-crawl script with conditional fetch (C32) on — unchanged
-    re-fetches are 304s and store nothing."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-cond"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_COND
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_COND, warehouse=wh))
-        eng.run(max_cycles=UNIT_COND.revisit_after)
-        eng.revisit(UNIT_COND.revisit_min_age)
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q110_conditional_fetch(spark, sf):
-    """C32 through the driver's harness: per-doc version history under
-    conditional re-fetch — the If-Modified-Since/ETag economy. Same
-    revisit script as q71, but a re-fetch whose span signature equals
-    the last stored version is a 304 and must NOT mint a version; the
-    refsim replays the identical rule, so any doc that stores an
-    unchanged copy (or drops a changed one) shifts a row. Oracle: the
-    UNIT_COND refsim's version-history table (crawl_oracle.py)."""
-    from ..portable import md5hash60
-
-    docs = _engine_cond(spark).documents()
-    return docs.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_versions"),
-        F.countDistinct(md5hash60(F.to_json("spans"))).alias("n_distinct_sigs"),
-        F.min("fetch_cycle").alias("first_fetch"),
-        F.max("fetch_cycle").alias("last_fetch"),
-    )
-
-
-def _engine_media(spark) -> CrawlEngine:
-    """UNIT_MEDIA crawl: media-heavy pages drawing media_refs from a
-    13-id-per-host asset namespace, so the same asset genuinely recurs
-    across documents (the corpus a media-dedup pass exists for)."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-media"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_MEDIA
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_MEDIA, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q102_media_dedup(spark, sf):
+def _media_dedup(eng):
     """P32 cross-document media dedup over the interleaved payload: at
     100 TB a large share of bytes is the SAME asset embedded on many
     pages (logos, thumbnails, CDN-shared files); storing/decoding one
@@ -754,11 +426,9 @@ def q102_media_dedup(spark, sf):
     min(struct(doc_id, offset)) — an order-insensitive partial
     aggregate, so the keeper is partitioning-invariant (never a
     window; the hot logo ref shuffles one row per map task, the same
-    discipline as chunk dedup q59). Oracle: refsim twin over the same
-    UNIT_MEDIA graph (crawl_oracle.py)."""
-    docs = _engine_media(spark).documents()
+    discipline as chunk dedup q59)."""
     m = (
-        docs.select("doc_id", F.explode("spans").alias("span"))
+        eng.documents().select("doc_id", F.explode("spans").alias("span"))
         .filter(F.col("span.kind") == "media")
         .select(
             F.col("span.media_ref").alias("media_ref"),
@@ -777,94 +447,7 @@ def q102_media_dedup(spark, sf):
     )
 
 
-def _engine_domgroup(spark) -> CrawlEngine:
-    """UNIT_DOMGROUP crawl: 2 registered domains × 3 subdomain hosts,
-    politeness keyed by the registered domain (C33) — the domain's
-    subdomains share ONE token bucket and one schedule cap."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-domgroup"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_DOMGROUP
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_DOMGROUP, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q114_domain_politeness(spark, sf):
-    """C33 through the driver's harness: with domain_politeness on,
-    the token bucket and per-host cap key on the registered domain
-    (substring_index(host, '.', -3)), so subdomain siblings compete
-    for one shared budget — a site can't multiply its crawl rate by
-    spreading pages across www/cdn/m hosts. Robots and site_priority
-    stay host-scoped (RFC 9309). The full fetch-attempt order must
-    match the refsim draining per-domain buckets (it differs from the
-    per-host twin wherever a domain's members would overdraw the
-    shared budget). Oracle: the UNIT_DOMGROUP refsim's q80 table
-    (crawl_oracle.py)."""
-    return _engine_domgroup(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_aging(spark) -> CrawlEngine:
-    """UNIT_AGING crawl: anti-starvation priority aging (C34) — the
-    drain key is the effective score base − age // aging_every."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-aging"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_AGING
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_AGING, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q115_priority_aging(spark, sf):
-    """C34 through the driver's harness: queued URLs gain one point of
-    effective priority every aging_every cycles spent waiting
-    (eff = score − (cycle − admission_cycle) // aging_every, derived
-    at drain time from the frontier row's stored admission cycle —
-    nothing ages in storage, so a resumed crawl re-derives the same
-    key). The full attempt order must match the refsim applying the
-    same decay; it measurably departs from the unaged twin (old rows
-    leapfrog fresh discoveries — the anti-starvation escalation a
-    production frontier scheduler ships). Oracle: the UNIT_AGING
-    refsim's q80 table (crawl_oracle.py)."""
-    return _engine_aging(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_anchor(spark) -> CrawlEngine:
-    """UNIT_ANCHOR crawl: anchor-text rendering on every outlink —
-    same ordering/seen set as UNIT (extraction ignores the anchor
-    suffix), but page text carries href="U">anc…</a> pairs."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-anchor"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_ANCHOR
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_ANCHOR, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def _anchor_pairs(spark):
+def _anchor_pairs(eng):
     """(src, dst, anchor): anchored outlinks of every fetched doc,
     target resolved+canonicalized exactly like discovery (C12b — the
     same Arrow resolve_canonicalize_udf the engine admits links
@@ -875,10 +458,9 @@ def _anchor_pairs(spark):
     from ..synth import ANCHOR_PATTERN
     from ..urlnorm import resolve_canonicalize_udf
 
-    docs = _engine_anchor(spark).documents()
-    spans = docs.select("doc_id", F.explode("spans").alias("span")).filter(
-        F.col("span.kind") == "text"
-    )
+    spans = eng.documents().select(
+        "doc_id", F.explode("spans").alias("span")
+    ).filter(F.col("span.kind") == "text")
     pairs = spans.select(
         F.col("doc_id").alias("src"),
         F.explode(
@@ -895,17 +477,16 @@ def _anchor_pairs(spark):
     return pairs.withColumn("dst", resolve_canonicalize_udf("src", "raw"))
 
 
-def q126_anchor_text(spark, sf):
+def _anchor_text(eng):
     """P43: the anchor-text profile — for every link TARGET, in-link
     count, distinct anchor-term count, and the dominant term (max
     count, lexicographic-min tie-break via min(struct(-n, term)) —
     partial-aggregation-order-safe). The off-page description of a URL
     that search/crawl stacks aggregate anchors for; at web scale this
     is two partial-agg groupBys over the (dst, term) stream, never a
-    per-target collect. Oracle: the UNIT_ANCHOR refsim fetch log
-    pushed through the shared extract_anchors_from_text + urljoin
-    (crawl_oracle.py)."""
-    pairs = _anchor_pairs(spark)
+    per-target collect. Oracle: the refsim fetch log pushed through the
+    shared extract_anchors_from_text + urljoin (crawl_oracle.py)."""
+    pairs = _anchor_pairs(eng)
     per_term = (
         pairs.select("dst", F.explode(F.split("anchor", " ")).alias("term"))
         .groupBy("dst", "term")
@@ -921,7 +502,7 @@ def q126_anchor_text(spark, sf):
     )
 
 
-def q127_anchor_authority(spark, sf):
+def _anchor_authority(eng):
     """P44: anchor-weighted authority — PageRank where an outlink's
     share of its page's rank is proportional to its anchor-term mass
     (links someone described with more words carry more endorsement),
@@ -932,601 +513,170 @@ def q127_anchor_authority(spark, sf):
     float shape (crawl_oracle._weighted_pagerank)."""
     from ..operators import graph
 
-    pairs = _anchor_pairs(spark)
     edges_w = (
-        pairs.select("src", "dst", F.size(F.split("anchor", " ")).alias("w"))
+        _anchor_pairs(eng)
+        .select("src", "dst", F.size(F.split("anchor", " ")).alias("w"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("weight"))
     )
     return graph.weighted_pagerank(edges_w, damping=0.85, iterations=6)
 
 
-def _engine_mirror(spark) -> CrawlEngine:
-    """UNIT_MIRROR crawl: cross-host mirrors + the C35 content-seen
-    suppression — mirrors resolve but are not stored and mint no
-    links."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-mirror"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_MIRROR
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_MIRROR, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q130_content_dedup(spark, sf):
-    """C35 through the driver's harness: with content_dedup on, a
-    successful fetch whose content signature was already stored — or
-    appeared earlier in the batch — is a mirror: not stored, links not
-    extracted. Suppressed links change later-cycle discovery, so the
-    FULL attempt order must match the refsim applying the identical
-    sequential rule (it measurably departs from the suppression-off
-    twin). Oracle: the UNIT_MIRROR refsim's q80 table."""
-    return _engine_mirror(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def q131_content_seen(spark, sf):
+def _content_seen(eng):
     """C35's identity map: content signature → the FIRST url that
     published it and the landing cycle — exactly one row per distinct
     stored content (the canonical-copy registry media/content dedup
-    consumers read). Oracle: first-occurrence-per-sig over the refsim
-    fetch log (crawl_oracle.py)."""
-    return _engine_mirror(spark).cat.read("content_seen").select(
-        "sig", "url_norm", "cycle_id"
-    )
+    consumers read)."""
+    return eng.cat.read("content_seen").select("sig", "url_norm", "cycle_id")
 
 
-def _engine_meta(spark) -> CrawlEngine:
-    """UNIT_META crawl: robots META directives on every 3rd
-    hash-picked page — noindex pages fetch but never store, nofollow
-    pages store but mint no links."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-meta"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_META
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_META, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q143_meta_robots(spark, sf):
-    """C36 through the driver's harness: with meta-robots honoring on,
-    nofollow pages mint no links — so later-cycle discovery (and the
-    FULL attempt order) measurably departs from the directive-free
-    twin and must match the refsim parsing the same page bytes with
-    an independent regex. Oracle: the UNIT_META refsim's q80 table."""
-    return _engine_meta(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def q144_meta_docs(spark, sf):
-    """C36's storage contract: the stored-document registry under
-    noindex suppression — fetched-but-noindex pages never land a row,
-    everything else does. Oracle: the UNIT_META refsim's q82 docs
-    table (doc counts, span counts, span signature)."""
-    d = _engine_meta(spark).documents()
-    return d.select(
-        "doc_id",
-        "fetch_cycle",
-        F.size("spans").alias("n_spans"),
-        F.size(F.filter("spans", lambda s: s["kind"] == "media")).alias("n_media"),
-        md5hash60(F.to_json("spans")).alias("span_sig"),
-    )
-
-
-def _engine_canon(spark) -> CrawlEngine:
-    """UNIT_CANON crawl: rel=canonical declarations on every 3rd
-    hash-picked page — variants fetch but never store; the declared
-    canonical enters discovery at the variant's depth."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-canon"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_CANON
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_CANON, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q145_canonical_order(spark, sf):
-    """C37 through the driver's harness: with rel=canonical honoring
-    on, declared canonicals enter discovery at the variant's depth
-    (ordered before the slot's links) and variants are never stored —
-    the FULL attempt order measurably departs from the
-    declaration-free twin and must match the refsim parsing the same
-    page bytes independently. Oracle: the UNIT_CANON refsim's q80."""
-    return _engine_canon(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def q146_canonicals(spark, sf):
-    """C37's identity map: every honored (variant → declared
-    canonical) hop, joined with whether/when the canonical entered the
-    seen set (-1 = killed at admission) — the q68 redirect-map shape
-    for the duplicate-URL collapse consumers. Oracle: the UNIT_CANON
-    refsim's canonicals log."""
-    eng = _engine_canon(spark)
-    cn = eng.cat.read("canonicals")
-    seen = eng.seen_set().select(
-        F.col("url_norm").alias("dst"), "first_cycle"
-    )
-    return cn.join(seen, "dst", "left").select(
-        "src", "dst", "cycle_id",
-        F.coalesce("first_cycle", F.lit(-1).cast("long")).alias("dst_first_cycle"),
-    )
-
-
-def _engine_hbudget(spark) -> CrawlEngine:
-    """UNIT_HBUDGET crawl: per-host lifetime page budget of 6 — the
-    mega-host pins at the cap, tail sites stay under it."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-hbudget"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_HBUDGET
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_HBUDGET, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q148_host_budget(spark, sf):
-    """C38 through the driver's harness: with a per-host lifetime page
-    budget, admissions beyond the cap stay unseen (they count as
-    deduped and never schedule), so the FULL attempt order measurably
-    departs from the uncapped twin and must match the refsim running
-    the identical sequential budget counter. Oracle: the UNIT_HBUDGET
-    refsim's q80 table."""
-    return _engine_hbudget(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def q149_host_admissions(spark, sf):
+def _host_admissions(eng):
     """C38's accounting: lifetime admissions per host from the
     append-only host_admissions deltas (seeds + per-cycle novel) —
-    every host at or under the budget, the mega-host exactly AT it.
-    Oracle: per-host rollup of the refsim's seen set with the host
-    independently re-derived in SQL (the q67 discipline)."""
+    every host at or under the budget, the mega-host exactly AT it."""
     return (
-        _engine_hbudget(spark)
-        .cat.read("host_admissions")
+        eng.cat.read("host_admissions")
         .groupBy("host")
         .agg(F.sum("n").alias("n_admitted"))
     )
 
 
-def _engine_clock(spark) -> CrawlEngine:
-    """UNIT_CLOCK crawl: frontier capped at 14 pending entries — the
-    clock sweeps most cycles; re-discovered pending URLs earn second
-    chances that visibly reshape the crawl."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-clock"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_CLOCK
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_CLOCK, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q153_clock_order(spark, sf):
-    """C39 through the driver's harness: with the frontier capped,
-    clock-evicted URLs never schedule and second-chance survivors do,
-    so the FULL attempt order measurably departs from the uncapped
-    twin and must match the refsim running the identical sequential
-    sweep (refsim.clock_sweep_py). Oracle: the UNIT_CLOCK refsim's
-    q80 table."""
-    return _engine_clock(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
+def _host_admissions_sql(tables: dict[str, str]) -> str:
+    """q149's oracle: a pure-SQL per-host rollup of the preset's seen
+    table (admissions == seen insertions; host re-derived
+    independently in SQL, the q67 discipline)."""
+    seen = tables["q81_crawl_seen"].split("FROM ")[1]
+    return (
+        "SELECT regexp_extract(url_norm, '^https?://([^/]+)', 1) AS host,"
+        " CAST(count(*) AS BIGINT) AS n_admitted"
+        f" FROM {seen} GROUP BY 1"
     )
 
 
-def _engine_clkrs(spark) -> CrawlEngine:
-    """UNIT_CLKRS scenario: the capped crawl runs 4 cycles, the 6
-    lexicographically-first seen URLs (two of them clock-evicted
-    earlier) reseed, then the crawl finishes — the C39 ∘ C21
-    composition. UNIT_CLKRS differs from UNIT_CLOCK only in the
-    reseed knobs, which the engine itself never reads — its
-    pre-reseed cycles are bit-identical to UNIT_CLOCK's — so the
-    harness BRANCHES the shared UNIT_CLOCK crawl at the reseed cycle
-    (CrawlEngine.branch_from, the C22 snapshot-rollback fork) instead
-    of re-crawling four cycles; the continuation is deterministic and
-    equal to the from-scratch run (asserted in
-    tests/test_clock_eviction.py)."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-clkrs"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_CLKRS
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine.branch_from(
-            _engine_clock(spark), UNIT_CLKRS.reseed_after,
-            EngineConfig(graph=UNIT_CLKRS, warehouse=wh),
-        )
-        victims = [
-            r["url_norm"]
-            for r in eng.seen_set().orderBy("url_norm")
-            .limit(UNIT_CLKRS.reseed_k).collect()
-        ]
-        eng.reseed(victims)
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q155_clock_reseed(spark, sf):
-    """C39 ∘ C21 composition through the driver's harness: clock
-    eviction tombstones are INCARNATION-keyed (url + seq), so a
-    reseeded victim that was evicted earlier re-queues as its fresh
-    incarnation and is re-fetched — a url-keyed tombstone would
-    shadow it forever and shift every later row. Oracle: the
-    UNIT_CLKRS refsim's q80 table (its reseed hook picks the same
-    lexicographic victims)."""
-    return _engine_clkrs(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_clocklw(spark) -> CrawlEngine:
-    """UNIT_CLOCKLW crawl: the capped frontier with low-water-mark
-    hysteresis (evict to cap − slack = 8) — sweeps fire on fewer
-    cycles but evict deeper, the amortization posture of a
-    continuously-capped production frontier."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-clocklw"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_CLOCKLW
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_CLOCKLW, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q156_clock_lowwater(spark, sf):
-    """C39 low-water-mark variant through the driver's harness: with
-    eviction depth cap − slack the sweep CADENCE and the eviction SETS
-    both change (deeper sweeps take entries the slack-0 twin kept, and
-    the ring hand advances further per sweep), so the full attempt
-    order diverges from q153's and must match the refsim running the
-    identical hysteresis rule. Oracle: the UNIT_CLOCKLW refsim's q80
-    table."""
-    return _engine_clocklw(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_quota(spark) -> CrawlEngine:
-    """UNIT_QUOTA crawl: each host's pending frontier share bounded at
-    5 — the dense mega-host's flood is admitted a few URLs per cycle
-    as its queue drains (C40)."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-quota"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_QUOTA
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_QUOTA, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q157_host_quota(spark, sf):
-    """C40 through the driver's harness: with per-host pending shares
-    bounded, over-quota discoveries stay unseen and re-candidate after
-    the host's queue drains, so the FULL attempt order diverges from
-    the unbounded twin and must match the refsim running the identical
-    start-of-cycle-snapshot admission rule. Oracle: the UNIT_QUOTA
-    refsim's q80 table."""
-    return _engine_quota(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_qclk(spark) -> CrawlEngine:
-    """UNIT_QCLK crawl: the C40 ∘ C39 composition — the quota shapes
-    the pending ring's per-host mix before the clock sweep bounds its
-    total."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-qclk"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_QCLK
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_QCLK, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q158_quota_clock(spark, sf):
-    """C40 ∘ C39 through the driver's harness: both admission points
-    active (per-host quota, then the global clock sweep), both engines
-    share both sequential rules — the composition's full attempt
-    order. Oracle: the UNIT_QCLK refsim's q80 table."""
-    return _engine_qclk(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def _engine_qdom(spark) -> CrawlEngine:
-    """UNIT_QDOM crawl: the C33 ∘ C40 composition — under domain
-    grouping the quota bucket is the PSL registered domain, so the
-    three grouped sub-hosts jointly hold one 6-entry ring share."""
-    from . import pin_session
-
-    pin_session(spark)
-    key = "unit-qdom"
-    if key not in _ENGINE_CACHE:
-        from ..synth import UNIT_QDOM
-
-        wh = tempfile.mkdtemp(prefix="crawlspark-q-")
-        eng = CrawlEngine(spark, EngineConfig(graph=UNIT_QDOM, warehouse=wh))
-        eng.run()
-        _ENGINE_CACHE[key] = eng
-    return _ENGINE_CACHE[key]
-
-
-def q159_domain_quota(spark, sf):
-    """C33 ∘ C40 through the driver's harness: the quota keyed by the
-    politeness bucket — grouped sub-hosts share ONE pending-ring
-    share (full-PSL registered-domain derivation on both sides), so
-    the attempt order diverges from both the host-keyed twin and the
-    quota-less domain-grouped crawl. Oracle: the UNIT_QDOM refsim's
-    q80 table."""
-    return _engine_qdom(spark).crawl_order().select(
-        "cycle_id", "batch_pos", "url_norm", "url_hash", "host", "score",
-        "seq", "depth", "attempt", "ok"
-    )
-
-
-def q154_evictions(spark, sf):
+def _evictions(eng):
     """C39's audit log: every sweep victim with the cycle and the lap
     that took it (1 = unreferenced, 2 = evicted after its second
-    chance on the wrapped lap). Oracle: the UNIT_CLOCK refsim's
-    eviction log."""
-    return _engine_clock(spark).cat.read("evictions").select(
-        "url_norm", "cycle_id", "lap"
-    )
+    chance on the wrapped lap)."""
+    return eng.cat.read("evictions").select("url_norm", "cycle_id", "lap")
 
 
-QUERIES = {
-    "q80_crawl_order": q80_crawl_order,
-    "q81_crawl_seen": q81_crawl_seen,
-    "q82_crawl_docs": q82_crawl_docs,
-    "q83_crawl_metrics": q83_crawl_metrics,
-    "q84_media_features": q84_media_features,
-    "q85_pagerank": q85_pagerank,
-    "q136_hits": q136_hits,
-    "q138_link_distance": q138_link_distance,
-    "q86_frame_sample": q86_frame_sample,
-    "q67_trap_guard": q67_trap_guard,
-    "q68_redirects": q68_redirects,
-    "q71_revisit_versions": q71_revisit_versions,
-    "q72_change_rates": q72_change_rates,
-    "q73_sitemap_seen": q73_sitemap_seen,
-    "q76_backoff": q76_backoff,
-    "q77_priority_feedback": q77_priority_feedback,
-    "q78_reseed": q78_reseed,
-    "q79_sitemap_index": q79_sitemap_index,
-    "q122_sitemap_revisit": q122_sitemap_revisit,
-    "q87_cuckoo_seen": q87_cuckoo_seen,
-    "q88_forget_recrawl": q88_forget_recrawl,
-    "q89_time_travel": q89_time_travel,
-    "q101_snapshot_diff": q101_snapshot_diff,
-    "q102_media_dedup": q102_media_dedup,
-    "q104_robots_revision": q104_robots_revision,
-    "q108_crawl_scope": q108_crawl_scope,
-    "q109_delay_politeness": q109_delay_politeness,
-    "q110_conditional_fetch": q110_conditional_fetch,
-    "q114_domain_politeness": q114_domain_politeness,
-    "q115_priority_aging": q115_priority_aging,
-    "q126_anchor_text": q126_anchor_text,
-    "q127_anchor_authority": q127_anchor_authority,
-    "q130_content_dedup": q130_content_dedup,
-    "q131_content_seen": q131_content_seen,
-    "q143_meta_robots": q143_meta_robots,
-    "q144_meta_docs": q144_meta_docs,
-    "q145_canonical_order": q145_canonical_order,
-    "q146_canonicals": q146_canonicals,
-    "q148_host_budget": q148_host_budget,
-    "q149_host_admissions": q149_host_admissions,
-    "q153_clock_order": q153_clock_order,
-    "q154_evictions": q154_evictions,
-    "q155_clock_reseed": q155_clock_reseed,
-    "q156_clock_lowwater": q156_clock_lowwater,
-    "q157_host_quota": q157_host_quota,
-    "q158_quota_clock": q158_quota_clock,
-    "q159_domain_quota": q159_domain_quota,
+# -- the scenario table --------------------------------------------------------
+
+
+class Crawl(NamedTuple):
+    """A crawl query: ``body`` over ``scenario(spark, preset, sidecar)``,
+    checked against the ``oracle`` table that crawl_oracle's refsim
+    builds for the same preset (a callable derives its SQL from that
+    preset's table dict)."""
+
+    preset: GraphConfig
+    oracle: str | Callable[[dict[str, str]], str]
+    body: Callable[[CrawlEngine], DataFrame]
+    sidecar: str = "bloom"
+
+
+ORDER, SEEN = "q80_crawl_order", "q81_crawl_seen"
+
+CRAWLS: dict[str, Crawl] = {
+    # the UNIT crawl: ordering, URL-seen set, span signatures, per-cycle
+    # counters, media features and link-graph analytics
+    "q80_crawl_order": Crawl(UNIT, ORDER, _order),
+    "q81_crawl_seen": Crawl(UNIT, SEEN, CrawlEngine.seen_set),
+    "q82_crawl_docs": Crawl(UNIT, "q82_crawl_docs", _docs),
+    "q83_crawl_metrics": Crawl(UNIT, "q83_crawl_metrics", _metrics),
+    "q84_media_features": Crawl(UNIT, "q84_media_features", _media_features),
+    "q85_pagerank": Crawl(UNIT, "q85_pagerank", _pagerank),
+    "q136_hits": Crawl(UNIT, "q136_hits", _hits),
+    "q138_link_distance": Crawl(UNIT, "q138_link_distance", _link_distance),
+    "q86_frame_sample": Crawl(UNIT, "q86_frame_sample", _frame_sample),
+    "q67_trap_guard": Crawl(UNIT_TRAP, "q67_trap_guard", _trap_guard),
+    "q68_redirects": Crawl(UNIT_REDIR, "q68_redirects", _redirects),
+    # C25 freshness revisit: version history and change rates
+    "q71_revisit_versions": Crawl(UNIT_REV, "q71_revisit_versions", _versions),
+    "q72_change_rates": Crawl(UNIT_REV, "q72_change_rates", _change_rates),
+    # C26 sitemaps: orphan pages have no route in but their <loc> entry
+    "q73_sitemap_seen": Crawl(UNIT_SMAP, SEEN, CrawlEngine.seen_set),
+    "q76_backoff": Crawl(UNIT, "q76_backoff", _backoff),
+    "q77_priority_feedback": Crawl(UNIT, "q77_priority_feedback", _priority_feedback),
+    # C21: reseeded URLs re-enter at depth 0 with new lexicographic seqs
+    "q78_reseed": Crawl(UNIT_RESEED, ORDER, _order),
+    # C26 robots `Sitemap:` directives fanning out through <sitemapindex>
+    "q79_sitemap_index": Crawl(UNIT_SMAPIDX, SEEN, CrawlEngine.seen_set),
+    # C25∘C26: re-queue exactly the listed URLs whose <lastmod> is newer
+    "q122_sitemap_revisit": Crawl(UNIT_SMLASTMOD, ORDER, _order),
+    # the cuckoo sidecar must land the same seen set as bloom
+    "q87_cuckoo_seen": Crawl(UNIT, "q87_cuckoo_seen", CrawlEngine.seen_set, "cuckoo"),
+    "q88_forget_recrawl": Crawl(UNIT, "q88_forget_recrawl", _forget_recrawl, "cuckoo"),
+    "q89_time_travel": Crawl(UNIT, "q89_time_travel", _time_travel),
+    "q101_snapshot_diff": Crawl(UNIT, "q101_snapshot_diff", _snapshot_diff),
+    # 13 media ids per host, so assets recur across documents
+    "q102_media_dedup": Crawl(UNIT_MEDIA, "q102_media_dedup", _media_dedup),
+    # C6: host 0 turns deny-all after cycle 3; its queue is pruned once
+    "q104_robots_revision": Crawl(UNIT_ROBREV, ORDER, _order),
+    # C29 depth cap 2 + C30 /p1N deny pattern at the admission point
+    "q108_crawl_scope": Crawl(UNIT_SCOPE, ORDER, _order),
+    # C31: token refill derived from each host's robots Crawl-delay
+    "q109_delay_politeness": Crawl(UNIT_DELAY, ORDER, _order),
+    # C32: the q71 revisit under conditional fetch (304s store nothing)
+    "q110_conditional_fetch": Crawl(UNIT_COND, "q71_revisit_versions", _versions),
+    # C33: subdomains share their registered domain's token bucket
+    "q114_domain_politeness": Crawl(UNIT_DOMGROUP, ORDER, _order),
+    # C34: queued rows gain a point of priority every 2 waiting cycles
+    "q115_priority_aging": Crawl(UNIT_AGING, ORDER, _order),
+    "q126_anchor_text": Crawl(UNIT_ANCHOR, "q126_anchor_text", _anchor_text),
+    "q127_anchor_authority": Crawl(UNIT_ANCHOR, "q127_anchor_authority", _anchor_authority),
+    # C35: mirrors are fetched but neither stored nor link-extracted
+    "q130_content_dedup": Crawl(UNIT_MIRROR, ORDER, _order),
+    "q131_content_seen": Crawl(UNIT_MIRROR, "q131_content_seen", _content_seen),
+    # C36: nofollow pages mint no links, noindex pages store no doc
+    "q143_meta_robots": Crawl(UNIT_META, ORDER, _order),
+    "q144_meta_docs": Crawl(UNIT_META, "q82_crawl_docs", _docs),
+    # C37: variants store nothing; the canonical enters at their depth
+    "q145_canonical_order": Crawl(UNIT_CANON, ORDER, _order),
+    "q146_canonicals": Crawl(UNIT_CANON, "q146_canonicals", _canonicals),
+    # C38: a lifetime page budget of 6 per host
+    "q148_host_budget": Crawl(UNIT_HBUDGET, ORDER, _order),
+    "q149_host_admissions": Crawl(UNIT_HBUDGET, _host_admissions_sql, _host_admissions),
+    # C39: the clock-capped frontier (14 pending entries)
+    "q153_clock_order": Crawl(UNIT_CLOCK, ORDER, _order),
+    "q154_evictions": Crawl(UNIT_CLOCK, "q154_evictions", _evictions),
+    # C39∘C21: evicted victims re-queue as fresh incarnations (a fork)
+    "q155_clock_reseed": Crawl(UNIT_CLKRS, ORDER, _order),
+    # C39 low-water mark: sweeps evict down to cap − slack = 8
+    "q156_clock_lowwater": Crawl(UNIT_CLOCKLW, ORDER, _order),
+    # C40: each host's pending share bounded at 5
+    "q157_host_quota": Crawl(UNIT_QUOTA, ORDER, _order),
+    # C40∘C39: the quota shapes the ring before the clock bounds it
+    "q158_quota_clock": Crawl(UNIT_QCLK, ORDER, _order),
+    # C33∘C40: grouped sub-hosts share one registered-domain quota
+    "q159_domain_quota": Crawl(UNIT_QDOM, ORDER, _order),
 }
+
+
+def _query(name: str, c: Crawl):
+    def run(spark, sf):
+        return c.body(scenario(spark, c.preset, c.sidecar))
+
+    run.__name__ = run.__qualname__ = name
+    run.__doc__ = c.body.__doc__
+    return run
+
+
+QUERIES = {name: _query(name, c) for name, c in CRAWLS.items()}
 
 ORACLE: dict[str, str] = {}
 
 
 def build_oracle() -> dict[str, str]:
-    """Refsim-generated DuckDB oracles (see crawl_oracle.py); called
-    lazily by ``all_oracles`` so importing the registry stays free.
-    q67's expectation comes from a second refsim run over the
-    trap-enabled graph config."""
+    """Refsim-generated DuckDB oracles (crawl_oracle.py), one per
+    CRAWLS entry; called lazily by ``all_oracles`` so importing the
+    registry runs no refsim. UNIT's own tables come first — they also
+    hold streamq's q93 — then the other queries by query number."""
     from .crawl_oracle import build_crawl_oracles
 
     sql = build_crawl_oracles(UNIT)
-    sql["q67_trap_guard"] = build_crawl_oracles(UNIT_TRAP)["q67_trap_guard"]
-    sql["q68_redirects"] = build_crawl_oracles(UNIT_REDIR)["q68_redirects"]
-    from ..synth import UNIT_REV
-
-    rev_sql = build_crawl_oracles(UNIT_REV)
-    sql["q71_revisit_versions"] = rev_sql["q71_revisit_versions"]
-    sql["q72_change_rates"] = rev_sql["q72_change_rates"]
-    # q73's expectation is just the seen table of the sitemap graph
-    from ..synth import UNIT_SMAP
-
-    sql["q73_sitemap_seen"] = build_crawl_oracles(UNIT_SMAP)["q81_crawl_seen"]
-    # q78: the full fetch-attempt order of the reseed scenario (its
-    # graph's q80 table); q79: the seen set of the robots-declared
-    # nested-sitemap graph (its q81 table)
-    from ..synth import UNIT_RESEED, UNIT_SMAPIDX
-
-    sql["q78_reseed"] = build_crawl_oracles(UNIT_RESEED)["q80_crawl_order"]
-    sql["q79_sitemap_index"] = build_crawl_oracles(UNIT_SMAPIDX)["q81_crawl_seen"]
-    # q102: the media-dedup expectation over the media-heavy graph
-    from ..synth import UNIT_MEDIA
-
-    sql["q102_media_dedup"] = build_crawl_oracles(UNIT_MEDIA)["q102_media_dedup"]
-    # q104: the full attempt order of the robots-revision scenario
-    # (its graph's q80 table)
-    from ..synth import UNIT_ROBREV
-
-    sql["q104_robots_revision"] = build_crawl_oracles(UNIT_ROBREV)["q80_crawl_order"]
-    # q108: the full attempt order of the crawl-scope scenario
-    from ..synth import UNIT_SCOPE
-
-    sql["q108_crawl_scope"] = build_crawl_oracles(UNIT_SCOPE)["q80_crawl_order"]
-    # q109: the attempt order under Crawl-delay-derived refill
-    from ..synth import UNIT_DELAY
-
-    sql["q109_delay_politeness"] = build_crawl_oracles(UNIT_DELAY)["q80_crawl_order"]
-    # q110: the version-history expectation under conditional fetch
-    # (its graph's q71 table — the refsim's doc_log already applies
-    # the 304 rule when the config sets conditional_fetch)
-    from ..synth import UNIT_COND
-
-    sql["q110_conditional_fetch"] = build_crawl_oracles(UNIT_COND)["q71_revisit_versions"]
-    # q114: the full attempt order under registered-domain politeness
-    # (its graph's q80 table — the refsim keys its buckets the same way)
-    from ..synth import UNIT_DOMGROUP
-
-    sql["q114_domain_politeness"] = build_crawl_oracles(UNIT_DOMGROUP)["q80_crawl_order"]
-    # q115: the full attempt order under anti-starvation priority
-    # aging (its graph's q80 table — the refsim derives the same
-    # effective-score drain key)
-    from ..synth import UNIT_AGING
-
-    sql["q115_priority_aging"] = build_crawl_oracles(UNIT_AGING)["q80_crawl_order"]
-    # q122: the full attempt order of the sitemap-lastmod-driven
-    # revisit (its graph's q80 table — the refsim re-fetches the
-    # stored sitemaps and derives the same due set)
-    from ..synth import UNIT_SMLASTMOD
-
-    sql["q122_sitemap_revisit"] = build_crawl_oracles(UNIT_SMLASTMOD)["q80_crawl_order"]
-    # q126/q127: anchor-text profile + anchor-weighted authority over
-    # the anchored graph (the refsim re-extracts pairs with the shared
-    # regex and runs the weighted power-iteration twin)
-    from ..synth import UNIT_ANCHOR
-
-    anchor_sql = build_crawl_oracles(UNIT_ANCHOR)
-    sql["q126_anchor_text"] = anchor_sql["q126_anchor_text"]
-    sql["q127_anchor_authority"] = anchor_sql["q127_anchor_authority"]
-    # q130/q131: attempt order + content-seen registry under the C35
-    # content-seen suppression (the refsim applies the identical
-    # sequential rule over the mirrored graph)
-    from ..synth import UNIT_MIRROR
-
-    mirror_sql = build_crawl_oracles(UNIT_MIRROR)
-    sql["q130_content_dedup"] = mirror_sql["q80_crawl_order"]
-    sql["q131_content_seen"] = mirror_sql["q131_content_seen"]
-    # q143/q144: attempt order + stored-docs registry under C36
-    # meta-robots honoring (the refsim parses the directives from the
-    # same page bytes with an independent regex)
-    from ..synth import UNIT_META
-
-    meta_sql = build_crawl_oracles(UNIT_META)
-    sql["q143_meta_robots"] = meta_sql["q80_crawl_order"]
-    sql["q144_meta_docs"] = meta_sql["q82_crawl_docs"]
-    # q145/q146: attempt order + alias map under C37 rel=canonical
-    # honoring (the refsim parses the declarations from the same page
-    # bytes with an independent regex)
-    from ..synth import UNIT_CANON
-
-    canon_sql = build_crawl_oracles(UNIT_CANON)
-    sql["q145_canonical_order"] = canon_sql["q80_crawl_order"]
-    sql["q146_canonicals"] = canon_sql["q146_canonicals"]
-    # q148/q149: attempt order + per-host admission accounting under
-    # the C38 host page budget; q149's expectation is a pure-SQL
-    # rollup of the budgeted graph's seen set (admissions == seen
-    # insertions; host re-derived independently in SQL)
-    from ..synth import UNIT_HBUDGET
-
-    hb_sql = build_crawl_oracles(UNIT_HBUDGET)
-    sql["q148_host_budget"] = hb_sql["q80_crawl_order"]
-    q81_hb = hb_sql["q81_crawl_seen"].split("FROM ")[1]
-    sql["q149_host_admissions"] = (
-        "SELECT regexp_extract(url_norm, '^https?://([^/]+)', 1) AS host,"
-        " CAST(count(*) AS BIGINT) AS n_admitted"
-        f" FROM {q81_hb} GROUP BY 1"
-    )
-    # q153/q154: attempt order + eviction log under the C39 clock
-    # frontier cap (the refsim runs the identical sequential sweep —
-    # refsim.clock_sweep_py — over the same ring states)
-    from ..synth import UNIT_CLOCK
-
-    ck_sql = build_crawl_oracles(UNIT_CLOCK)
-    sql["q153_clock_order"] = ck_sql["q80_crawl_order"]
-    sql["q154_evictions"] = ck_sql["q154_evictions"]
-    # q155: the C39 ∘ C21 composition — the refsim's reseed hook picks
-    # the same lexicographic victims the scenario engine reseeds
-    from ..synth import UNIT_CLKRS
-
-    sql["q155_clock_reseed"] = build_crawl_oracles(UNIT_CLKRS)["q80_crawl_order"]
-    # q156: the low-water-mark hysteresis variant — both twins share
-    # the evict-to-(cap − slack) rule through GraphConfig
-    from ..synth import UNIT_CLOCKLW
-
-    sql["q156_clock_lowwater"] = build_crawl_oracles(UNIT_CLOCKLW)["q80_crawl_order"]
-    # q157/q158: C40 per-host frontier quota and its C39 composition —
-    # both twins share the start-of-cycle-snapshot admission rule (and,
-    # for q158, the clock sweep) through GraphConfig
-    from ..synth import UNIT_QCLK, UNIT_QUOTA
-
-    sql["q157_host_quota"] = build_crawl_oracles(UNIT_QUOTA)["q80_crawl_order"]
-    sql["q158_quota_clock"] = build_crawl_oracles(UNIT_QCLK)["q80_crawl_order"]
-    # q159: C33 ∘ C40 — the quota bucket is the registered domain
-    from ..synth import UNIT_QDOM
-
-    sql["q159_domain_quota"] = build_crawl_oracles(UNIT_QDOM)["q80_crawl_order"]
+    for name in sorted(CRAWLS, key=lambda n: int(n[1:].split("_")[0])):
+        c = CRAWLS[name]
+        tables = build_crawl_oracles(c.preset)
+        sql[name] = c.oracle(tables) if callable(c.oracle) else tables[c.oracle]
     return sql

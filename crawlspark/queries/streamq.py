@@ -193,11 +193,10 @@ def q93_crawl_stream_rates(spark, sf):
     micro-batch and aggregate per-(cycle, host) outcome counts to
     completion. Oracle: refsim-generated (crawl_oracle.py) — the
     stream's final state must equal the reference drain's history."""
-    from . import pin_session
-    from .crawlq import _engine
+    from ..synth import UNIT
+    from .crawlq import scenario
 
-    pin_session(spark)
-    eng = _engine(spark)
+    eng = scenario(spark, UNIT)
     name = f"q93_sink_{next(_COUNTER)}"
     stream = S.crawl_schedule_stream(spark, eng.cfg.warehouse, max_files_per_trigger=1)
     q = (

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, fields, replace
 
 
 def h64(*parts) -> int:
@@ -62,6 +62,22 @@ class AdmissionCap:
     def scope_of(self, host: str, path: str, pol_key: str) -> tuple:
         row = {"host": host, "path": path, "pol_key": pol_key}
         return tuple(row[k] for k in self.scope)
+
+
+# The mid-crawl script (C25 revisit, C25∘C26 sitemap revisit, C21
+# reseed, C6 robots revocation): per step, the CrawlEngine method that
+# runs it, the field naming the cycle after which it runs, and the field
+# holding its argument. Steps due after the same cycle run in this
+# order, the order RefSim.run applies them. The engine reads none of
+# these fields, so two configs that differ only in steps due at or
+# after cycle c share their crawl up to c (CrawlEngine.branch_from).
+SCRIPT = (
+    ("revisit", "revisit_after", "revisit_min_age"),
+    ("revisit_from_sitemaps", "sitemap_revisit_after", None),
+    ("reseed", "reseed_after", "reseed_k"),
+    ("update_politeness", "robots_revoke_after", "robots_revoke_hosts"),
+)
+SCRIPT_FIELDS = tuple(f for _step, *fs in SCRIPT for f in fs if f)
 
 
 @dataclass(frozen=True)
@@ -316,6 +332,24 @@ class GraphConfig:
     # schedule log and the refsim both record the effective score.
     # None = off: the drain key is byte-identical to before.
     priority_aging_every: int | None = None
+
+    # -- mid-crawl script ----------------------------------------------------
+
+    def script(self) -> list[tuple[int, str, object]]:
+        """(cycle, step, argument) of every SCRIPT step this config
+        sets, in run order: by cycle, then in SCRIPT order."""
+        steps = [
+            (getattr(self, after), step, arg and getattr(self, arg))
+            for step, after, arg in SCRIPT
+            if getattr(self, after) is not None
+        ]
+        return sorted(steps, key=lambda s: s[0])
+
+    def without_script(self) -> GraphConfig:
+        """This config with every SCRIPT field at its default."""
+        return replace(self, **{
+            f.name: f.default for f in fields(self) if f.name in SCRIPT_FIELDS
+        })
 
     # -- crawl policy --------------------------------------------------------
 

@@ -10,12 +10,14 @@ from __future__ import annotations
 import dataclasses
 import random
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.operators import clock
+from crawlspark.queries.crawlq import scenario
 from crawlspark.refsim import RefSim, clock_sweep_py
 from crawlspark.synth import UNIT_CLOCK
 
@@ -103,10 +105,8 @@ def test_scenario_bites():
 
 
 def test_engine_matches_refsim_and_holds_cap(spark):
-    eng = CrawlEngine(
-        spark, EngineConfig(graph=UNIT_CLOCK, warehouse=tempfile.mkdtemp())
-    )
-    eng.run()
+    # the q153/q154 harness crawl (read only: other tests fork it)
+    eng = scenario(spark, UNIT_CLOCK)
     ref = RefSim(UNIT_CLOCK).run()
     got = [
         (r["cycle_id"], r["batch_pos"], r["url_norm"], r["host"], r["score"],
@@ -213,24 +213,12 @@ def test_branch_from_equals_from_scratch(spark):
     reproduces the from-scratch UNIT_CLKRS run exactly (refsim order +
     eviction log — the same oracle test_reseed_revives_evicted_
     incarnation pins for the from-scratch path). This is the fork the
-    q155 harness uses instead of re-crawling the shared prefix."""
+    q155 harness crawl is. The fork also purges staged dirs of
+    snapshot ids past 999999, and refuses a config that is not a valid
+    continuation of the base."""
     from crawlspark.synth import UNIT_CLKRS
 
-    base = CrawlEngine(
-        spark, EngineConfig(graph=UNIT_CLOCK, warehouse=tempfile.mkdtemp())
-    )
-    base.run()
-    eng = CrawlEngine.branch_from(
-        base, UNIT_CLKRS.reseed_after,
-        EngineConfig(graph=UNIT_CLKRS, warehouse=tempfile.mkdtemp()),
-    )
-    victims = [
-        r["url_norm"]
-        for r in eng.seen_set().orderBy("url_norm")
-        .limit(UNIT_CLKRS.reseed_k).collect()
-    ]
-    eng.reseed(victims)
-    eng.run()
+    eng = scenario(spark, UNIT_CLKRS)
     ref = RefSim(UNIT_CLKRS).run()
     got = [
         (r["cycle_id"], r["batch_pos"], r["url_norm"], r["host"], r["score"],
@@ -242,6 +230,27 @@ def test_branch_from_equals_from_scratch(spark):
         (r["url_norm"], r["cycle_id"], r["lap"])
         for r in eng.cat.read("evictions").collect()
     ) == sorted(ref.evictions)
+
+    base, cycle = scenario(spark, UNIT_CLOCK), UNIT_CLKRS.reseed_after
+    # a staged dir of snapshot 1000000 (7-digit id) is later than the
+    # fork snapshot, so the purge must drop it
+    dst = Path(tempfile.mkdtemp())
+    stray = dst / "data" / "frontier" / "s1000000-001"
+    stray.mkdir(parents=True)
+    CrawlEngine.branch_from(base, cycle, dataclasses.replace(eng.cfg, warehouse=str(dst)))
+    assert not stray.exists()
+    # refused: a graph field the shared prefix depends on, and a
+    # script step due before the fork cycle
+    for bad in (
+        dataclasses.replace(UNIT_CLOCK, batch_size=9),
+        dataclasses.replace(UNIT_CLKRS, reseed_after=cycle - 2),
+    ):
+        dst = tempfile.mkdtemp()
+        with pytest.raises(ValueError):
+            CrawlEngine.branch_from(
+                base, cycle, dataclasses.replace(base.cfg, graph=bad, warehouse=dst)
+            )
+        assert not list(Path(dst).iterdir())
 
 
 def test_resume_exact(spark):

@@ -58,6 +58,7 @@ from .catalog import Catalog
 from .gen import host_config_df, seeds_df
 from .operators import fetch as fetch_ops
 from .operators import clock, cuckoo, politeness, schedule, seen
+from .portable import md5hash60
 from .schemas import CLOCK_STATE, METRICS
 from .synth import GraphConfig
 from .urlnorm import canonicalize_udf, resolve_canonicalize_udf, with_url_parts
@@ -150,7 +151,14 @@ class CrawlEngine:
         Results are parallelism-independent (determinism gates in
         tests/test_refsim_equivalence.py), so this changes cost only.
         Confs are restored on exit; BENCH/DESIGN/T2-tier graphs and
-        engines with auto_tune=False are untouched."""
+        engines with auto_tune=False are untouched.
+
+        The confs are SESSION-GLOBAL, not engine-local: while the window
+        is open, every job on the session — another engine's, or an
+        ad-hoc query from another thread — runs at width ≤ 8 with AQE
+        off. This assumes one engine runs on a session at a time (the
+        harness and the CLI are single-threaded); give concurrent
+        engines separate sessions or auto_tune=False."""
         g = self.cfg.graph
         if (
             self._tune_depth
@@ -305,6 +313,32 @@ class CrawlEngine:
             )
         return rows.groupBy(*cap.scope).agg(F.sum("n").alias("n_admitted"))
 
+    def _admit(self, df: DataFrame, hc: DataFrame) -> DataFrame:
+        """Discovery admission of canonical URLs carrying a ``depth``
+        (seeds, links and hops, reseeds — the refsim's admit()): url
+        parts, robots and crawl-scope filters, then score and salt."""
+        df = politeness.robots_filter(with_url_parts(df), hc)
+        df = schedule.with_score(politeness.scope_filter(df, self.cfg.graph))
+        return schedule.with_salt(df, self.cfg.n_salt)
+
+    def _pending(self, snap) -> DataFrame:
+        """The live frontier: frontier minus resolved tombstones
+        (fetched OK or retries exhausted) and, under C39, minus
+        clock-evicted entries. Evictions are keyed by INCARNATION
+        (url + seq): a C20/C21/C25 forget/reseed/revisit re-injection
+        mints a new seq and stays live — only the evicted row is dead
+        (evicted URLs stay in url_seen: accepted once, never fetched)."""
+        keys = ["url_hash", "url_norm"]
+        live = self.cat.read("frontier", snap).join(
+            self.cat.read("resolved", snap).select(*keys), keys, "left_anti"
+        )
+        if self.cfg.graph.frontier_cap is not None:
+            live = live.join(
+                self.cat.read("evictions", snap).select(*keys, "seq"),
+                [*keys, "seq"], "left_anti",
+            )
+        return live
+
     def _clock_hand(self, snap) -> int:
         """C39: the admission seq the next eviction sweep resumes at
         (single-row clock_state table; 0 before the first sweep =
@@ -439,18 +473,15 @@ class CrawlEngine:
 
         g = self.cfg.graph
         hc = self._host_config()
-        f0 = (
+        f0 = self._admit(
             seeds_df(self.spark, g)
             .withColumn("url_norm", canonicalize_udf("url"))
             .filter(F.col("url_norm").isNotNull())
+            .withColumn("depth", F.lit(0)),
+            hc,
         )
-        f0 = with_url_parts(f0)
-        f0 = politeness.robots_filter(f0, hc)
         w_dedup = Window.partitionBy("url_norm").orderBy("pos")
         f0 = f0.withColumn("rn", F.row_number().over(w_dedup)).filter(F.col("rn") == 1)
-        f0 = schedule.with_salt(f0, self.cfg.n_salt)
-        f0 = f0.withColumn("depth", F.lit(0))
-        f0 = politeness.scope_filter(f0, g)
         cap = self.admission_cap
         if cap is not None:
             # the ring and every lifetime count are empty at bootstrap:
@@ -460,7 +491,6 @@ class CrawlEngine:
                 self._with_scope(f0, cap), None, cap.budget,
                 keys=cap.scope, order=("pos",),
             )
-        f0 = schedule.with_score(f0)
         # seed seq = seed-list position; rank distributed above ~64k
         # seeds (DESIGN-tier seed lists are 300k+ — same no-funnel
         # posture as cycle discoveries and bulk reseeds)
@@ -512,42 +542,123 @@ class CrawlEngine:
 
     # -- one micro-cycle --------------------------------------------------------
 
+    def _page_fate(self, pages: DataFrame, snap, c: int) -> tuple[DataFrame, list]:
+        """The page rules, decided once per successfully fetched page
+        (RefSim.run decides the same fate in one block). ``pages`` are
+        the cycle's successful non-redirect fetches. Returns the pages
+        minus C35 mirrors, with ``store``, ``follow`` and ``canon``
+        (the declared canonical of a C37 alias page, else null), and
+        the appends the rules own — content_seen, the stored pages'
+        documents, canonicals — in staging order.
+
+        - C35 content-seen (Mercator-style): a page whose content
+          signature is already stored (an earlier cycle) or appeared
+          EARLIER IN THIS BATCH (batch_pos order — the refsim's
+          sequential rule) is a MIRROR: it still resolves (no
+          refetch), but is neither stored nor followed. The
+          content_seen append holds every other page, stored or not.
+        - C36 robots META and C37 rel=canonical are honored from the
+          PARSED page bytes (one JVM regexp each over the joined text
+          spans; the refsim runs an independent Python parser over the
+          same text): noindex → not stored; nofollow → stored, but its
+          links vanish from discovery; a page declaring a DIFFERENT
+          canonical is an alias — not stored (the canonical page owns
+          the content), its links extract, and the hop lands in
+          `canonicals`.
+        - C32 conditional re-fetch: a stored page whose signature
+          equals its LAST stored version is a 304 — no new version
+          lands, so unchanged pages cost zero storage.
+
+        sig = md5-60 of the canonical span JSON (collision ≈ 2^-60).
+        Rules that are off contribute literals, so with every rule off
+        the pages pass through unchanged. Scale: the C35 stored probe
+        joins content_seen projected to its sig (at 10^10 docs it gets
+        the same Bloom-sidecar treatment as url_seen); C32 scans the
+        documents log for the latest sig per doc, on the stored branch
+        only — a revisit-scenario knob; a 10^10-doc deployment keeps a
+        (doc_id, last_sig) index maintained by the same append, the
+        incremental-dedup band-index pattern (dedup.py)."""
+        g = self.cfg.graph
+        sig = md5hash60(F.to_json("spans"))
+        text = F.concat_ws(" ", F.transform("spans", lambda s: s["text"]))
+        directive = F.lit("")
+        if g.meta_robots_every:
+            directive = F.regexp_extract(
+                text, '<meta name="robots" content="([a-z,]+)">', 1
+            )
+        declared = F.lit("")
+        if g.canonical_every:
+            declared = F.regexp_extract(
+                text, '<link rel="canonical" href="([^"]+)">', 1
+            )
+        canon = F.when((declared != "") & (declared != F.col("doc_id")), declared)
+        pages = pages.select(
+            "*",
+            (~directive.contains("noindex") & canon.isNull()).alias("store"),
+            (~directive.contains("nofollow")).alias("follow"),
+            canon.alias("canon"),
+        )
+        if g.content_dedup or g.conditional_fetch:
+            pages = pages.withColumn("sig", sig)
+        writes = []
+        if g.content_dedup:
+            prev = self.cat.read("content_seen", snap).select(
+                "sig", F.lit(True).alias("_stored")
+            )
+            pages = (
+                pages.withColumn("_rn", F.row_number().over(
+                    Window.partitionBy("sig").orderBy("batch_pos")
+                ))
+                .join(prev, "sig", "left")
+                .filter((F.col("_rn") == 1) & F.col("_stored").isNull())
+                .drop("_rn", "_stored")
+                .localCheckpoint(eager=False)
+            )
+            writes.append(("content_seen", pages.select(
+                "sig", F.col("doc_id").alias("url_norm"),
+                F.lit(c).cast("long").alias("cycle_id"),
+            )))
+        stored = pages.filter("store")
+        if g.conditional_fetch:
+            prev = (
+                self.cat.read("documents", snap)
+                .groupBy("doc_id")
+                .agg(F.max_by(sig, F.col("fetch_cycle")).alias("prev_sig"))
+            )
+            stored = stored.join(prev, "doc_id", "left").filter(
+                F.col("prev_sig").isNull() | (F.col("prev_sig") != F.col("sig"))
+            )
+        writes.append(
+            ("documents", stored.select("doc_id", "fetch_cycle", "host", "spans"))
+        )
+        if g.canonical_every:
+            writes.append(("canonicals", pages.filter(F.col("canon").isNotNull()).select(
+                F.col("url_norm").alias("src"),
+                F.col("canon").alias("dst"),
+                F.lit(c).cast("long").alias("cycle_id"),
+            )))
+        return pages, writes
+
     @_tuned_method
     def run_cycle(self, c: int) -> dict:
         t0 = time.time()
         g = self.cfg.graph
         snap = self.cat.current_snapshot()
-        frontier = self.cat.read("frontier", snap)
         url_seen = self.cat.read("url_seen", snap)
         bloom = self.cat.read(self._sidecar_table, snap)
         host_state = self.cat.read("host_state", snap)
         hc = self.cat.read("host_config", snap)
-        resolved = self.cat.read("resolved", snap)
         retry = self.cat.read("retry_state", snap)
 
-        # QUEUED = frontier minus resolved tombstones (fetched OK or
-        # retries exhausted), with the attempt number for in-flight
-        # retries. Both side tables are ≤ O(batch) per cycle (resolved
-        # bounded between folds) — the full `scheduled` history log is
-        # never scanned here. A failed attempt re-queues with its
-        # original (score, seq): the batch TTR-re-release analogue.
+        # QUEUED = the live frontier with the attempt number for
+        # in-flight retries. The tombstone tables are ≤ O(batch) per
+        # cycle (bounded between folds; the eviction log by total
+        # evictions) — the full `scheduled` history log is never
+        # scanned here. A failed attempt re-queues with its original
+        # (score, seq): the batch TTR-re-release analogue.
         keys = ["url_hash", "url_norm"]
-        queued_src = frontier.join(resolved.select(*keys), keys, "left_anti")
-        if g.frontier_cap is not None:
-            # C39: clock-evicted entries are frontier tombstones (they
-            # stay in url_seen — accepted once, never fetched). Keyed
-            # by INCARNATION (url + seq): a C20/C21/C25 forget/reseed/
-            # revisit re-injection mints a new seq and must queue —
-            # only the evicted frontier row stays dead. The log is
-            # bounded by total evictions and folds away with the rest
-            # of working state (fold_state drops the rows from the
-            # frontier itself).
-            queued_src = queued_src.join(
-                self.cat.read("evictions", snap).select(*keys, "seq"),
-                [*keys, "seq"], "left_anti",
-            )
         queued = (
-            queued_src
+            self._pending(snap)
             .join(retry, keys, "left")
             .withColumn("attempt", (F.coalesce("n_fail", F.lit(0)) + 1).cast("int"))
             .drop("n_fail")
@@ -619,87 +730,9 @@ class CrawlEngine:
             docs.unpersist()
             return {"cycle": c, "scheduled": 0, "deduped": 0, "discovered": 0,
                     "wall_ms": int((time.time() - t0) * 1000), "stop": True}
-        docs_ok = docs.filter(F.col("ok") & F.col("redirect_to").isNull())
-        if g.meta_robots_every or g.canonical_every:
-            # C36/C37 parse the same joined page text
-            page_text = F.concat_ws(
-                " ", F.transform("spans", lambda s: s["text"])
-            )
-        if g.meta_robots_every:
-            # C36 robots META directives, honored from the PARSED page
-            # bytes (one JVM regexp over the joined text spans — the
-            # refsim runs an independent Python parser over the same
-            # text): noindex → the attempt is logged and links extract,
-            # but the document is never stored; nofollow → stored, but
-            # its links vanish from discovery. Narrow column math on
-            # the cached fetch frame — no extra shuffle, flag-gated.
-            _mdir = F.regexp_extract(
-                page_text, '<meta name="robots" content="([a-z,]+)">', 1
-            )
-            docs_ok = docs_ok.withColumn(
-                "_m_noindex", _mdir.contains("noindex")
-            ).withColumn("_m_nofollow", _mdir.contains("nofollow"))
-        if g.canonical_every:
-            # C37 rel=canonical aliasing, honored from the PARSED page
-            # bytes (the refsim runs an independent Python parser over
-            # the same text): a page declaring a DIFFERENT canonical is
-            # a duplicate-URL variant — its fetch is logged and links
-            # extract, but no document is stored under the variant; the
-            # canonical target re-enters discovery at the SAME depth,
-            # ordered before this slot's links (the C24 redirect
-            # discipline), and the hop lands in `canonicals`. Narrow
-            # column math on the cached fetch frame, flag-gated.
-            _canon = F.regexp_extract(
-                page_text, '<link rel="canonical" href="([^"]+)">', 1
-            )
-            docs_ok = docs_ok.withColumn("_c_canon", _canon).withColumn(
-                "_c_alias",
-                (F.col("_c_canon") != "") & (F.col("_c_canon") != F.col("doc_id")),
-            )
-        content_delta = None
-        if g.content_dedup:
-            # C35 content-seen test (Mercator-style): a successful
-            # fetch whose content signature is already STORED (an
-            # earlier cycle) or appeared EARLIER IN THIS BATCH
-            # (batch_pos order — the refsim's sequential rule) is a
-            # MIRROR: it still resolves (no refetch), but it is not
-            # stored and its links are not extracted. sig = md5-60 of
-            # the canonical span JSON, the C32 discipline (collision
-            # ≈ 2^-60). Scale: the stored probe is a join against
-            # content_seen projected to its sig column — at 10^10
-            # docs this table gets the same Bloom-sidecar treatment
-            # as url_seen (C5); the within-batch window is ≤ batch
-            # rows. One extra shuffle per cycle, flag-gated.
-            from .portable import md5hash60 as _h60
-            from pyspark.sql import Window as _W
-
-            prev_sigs = (
-                self.cat.read("content_seen", snap)
-                .select("sig")
-                .withColumn("_dup_stored", F.lit(True))
-            )
-            docs_ok = (
-                docs_ok.withColumn("sig", _h60(F.to_json("spans")))
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        _W.partitionBy("sig").orderBy("batch_pos")
-                    ),
-                )
-                .join(prev_sigs, "sig", "left")
-                .withColumn(
-                    "content_novel",
-                    (F.col("_rn") == 1) & F.col("_dup_stored").isNull(),
-                )
-                .drop("_rn", "_dup_stored")
-                .localCheckpoint(eager=False)
-            )
-            content_delta = docs_ok.filter(F.col("content_novel")).select(
-                "sig",
-                F.col("doc_id").alias("url_norm"),
-                F.lit(c).cast("long").alias("cycle_id"),
-            )
-            docs_ok = docs_ok.filter(F.col("content_novel"))
+        pages, page_writes = self._page_fate(
+            docs.filter(F.col("ok") & F.col("redirect_to").isNull()), snap, c
+        )
         # attempt outcomes back onto the batch metadata (1:1 on url_norm)
         sched_rows = batch.join(
             docs.select(
@@ -708,11 +741,7 @@ class CrawlEngine:
             ),
             "url_norm",
         ).persist()
-        links = fetch_ops.extract_links(
-            docs_ok.filter(~F.col("_m_nofollow"))
-            if g.meta_robots_every
-            else docs_ok
-        )
+        links = fetch_ops.extract_links(pages.filter("follow"))
 
         def hops(df: DataFrame, target: str) -> DataFrame:
             # a hop target re-enters discovery at the SAME depth —
@@ -735,15 +764,15 @@ class CrawlEngine:
                 docs.filter(F.col("ok") & F.col("redirect_to").isNotNull()),
                 "redirect_to",
             ))
-        if g.canonical_every:
-            # C37: the declared canonical re-enters discovery at the
-            # variant's depth, ahead of the slot's body links (which
-            # include the declaration's own href at link_pos 0), so
-            # within-batch dedup keeps the SAME-DEPTH alias admission on
-            # both engines.
-            links = links.unionByName(
-                hops(docs_ok.filter(F.col("_c_alias")), "_c_canon")
-            )
+        # C37: the declared canonical re-enters discovery at the
+        # alias's depth, ahead of the slot's body links (which include
+        # the declaration's own href at link_pos 0), so within-batch
+        # dedup keeps the SAME-DEPTH alias admission on both engines.
+        # (With the rule off `canon` is a null literal: the optimizer
+        # drops this branch.)
+        links = links.unionByName(
+            hops(pages.filter(F.col("canon").isNotNull()), "canon")
+        )
         # resolve relative hrefs against the fetching doc (urljoin
         # semantics), then canonicalize — one Arrow pass (C13 → C1)
         cand = (
@@ -752,12 +781,7 @@ class CrawlEngine:
             .drop("raw_url")
             .withColumn("depth", (F.col("depth") + 1).cast("int"))
         )
-        cand = with_url_parts(cand)
-        cand = politeness.robots_filter(cand, hc)
-        cand = politeness.scope_filter(cand, g)
-        cand = schedule.with_score(cand)
-        cand = schedule.with_salt(cand, self.cfg.n_salt)
-        cand = cand.withColumn("part", self._part())
+        cand = self._admit(cand, hc).withColumn("part", self._part())
         cand = schedule.dedup_within_batch(cand).persist()
 
         # keep the persisted probe result under its own name: unpersist
@@ -996,7 +1020,8 @@ class CrawlEngine:
         # - retry_state is content-identical when no attempt failed
         #   retryably AND no scheduled row was in the retry pool
         #   (attempt > 1), since retry ANTI sched == retry then;
-        # - resolved gains rows only from successes or exhaustions.
+        # - resolved gains rows only from successes or exhaustions;
+        # - the page-rule appends are empty when no page was fetched.
         # (fetch_log is no longer a stored table at all: it is derived
         # on read from scheduled ⋈ documents — engine.fetch_log().)
         # NOTE (measured, r3): collapsing these micro-batch appends to
@@ -1044,67 +1069,7 @@ class CrawlEngine:
                     None,
                 ))
         if n_docs:
-            new_docs = (
-                # under C35/C36/C37 docs_ok already carries the
-                # suppression state (content-novel subset / meta flags /
-                # canonical-alias flags)
-                docs_ok
-                if (g.content_dedup or g.meta_robots_every or g.canonical_every)
-                else docs.filter(F.col("ok") & F.col("redirect_to").isNull())
-            )
-            if g.meta_robots_every:
-                # C36: noindex pages are fetched but never stored
-                new_docs = new_docs.filter(~F.col("_m_noindex"))
-            if g.canonical_every:
-                # C37: canonical-alias variants are fetched but never
-                # stored — the canonical page owns the content
-                new_docs = new_docs.filter(~F.col("_c_alias"))
-            new_docs = new_docs.select("doc_id", "fetch_cycle", "host", "spans")
-            if content_delta is not None:
-                writes.append(("append", "content_seen", content_delta, None))
-            if g.conditional_fetch:
-                # C32 conditional re-fetch: a re-fetch whose content
-                # signature equals the LAST stored version is a 304 —
-                # drop it here so unchanged pages cost zero storage.
-                # md5-60 of the canonical span JSON is the signature
-                # discipline used everywhere (collision ≈ 2^-60).
-                # NOTE (scale): this scans the documents log for the
-                # latest sig per doc — acceptable because the knob is
-                # a revisit-scenario feature; a 10^10-doc deployment
-                # keeps a (doc_id, last_sig) index table maintained by
-                # this same append, exactly the incremental-dedup
-                # band-index pattern (dedup.py).
-                from .portable import md5hash60
-
-                sig = md5hash60(F.to_json("spans"))
-                prev = (
-                    self.cat.read("documents", snap)
-                    .groupBy("doc_id")
-                    .agg(F.max_by(sig, F.col("fetch_cycle")).alias("prev_sig"))
-                )
-                new_docs = (
-                    new_docs.withColumn("_sig", sig)
-                    .join(prev, "doc_id", "left")
-                    .filter(
-                        F.col("prev_sig").isNull()
-                        | (F.col("prev_sig") != F.col("_sig"))
-                    )
-                    .select("doc_id", "fetch_cycle", "host", "spans")
-                )
-            writes.append(("append", "documents", new_docs, None))
-        if g.canonical_every:
-            # C37: record every honored rel=canonical hop (variant →
-            # declared canonical) — the duplicate-URL identity map;
-            # one narrow pass over the cached fetch frame
-            writes.append((
-                "append", "canonicals",
-                docs_ok.filter(F.col("_c_alias")).select(
-                    F.col("url_norm").alias("src"),
-                    F.col("_c_canon").alias("dst"),
-                    F.lit(c).cast("long").alias("cycle_id"),
-                ),
-                None,
-            ))
+            writes += [("append", t, df, None) for t, df in page_writes]
         if n_redir:
             # C24: record every successful hop (alias → canonical
             # Location) even when the target was already seen — the
@@ -1179,24 +1144,14 @@ class CrawlEngine:
         exactly ∝ the active frontier. Queued semantics are unchanged
         by construction (frontier ANTI ∅ == (frontier ANTI resolved))."""
         snap = self.cat.current_snapshot()
-        keys = ["url_hash", "url_norm"]
-        frontier = self.cat.read("frontier", snap)
-        resolved = self.cat.read("resolved", snap)
-        active = frontier.join(resolved.select(*keys), keys, "left_anti")
-        if self.cfg.graph.frontier_cap is not None:
-            # C39: fold eviction tombstones out of the frontier too —
-            # incarnation-keyed like the queued read, so a reseeded
-            # row's fresh seq survives; the evictions table itself
-            # stays as the audit log (its anti-join cost after a fold
-            # is ∝ lifetime evictions — a 10^10 deployment compacts it
-            # into the same bucketed mirror as url_seen)
-            active = active.join(
-                self.cat.read("evictions", snap).select(*keys, "seq"),
-                [*keys, "seq"], "left_anti",
-            )
         hs_latest = politeness.latest_host_state(self.cat.read("host_state", snap))
         txn = self.cat.begin()
-        txn.overwrite("frontier", active)
+        # C39 eviction tombstones fold out of the frontier too; the
+        # evictions table itself stays as the audit log (its anti-join
+        # cost after a fold is ∝ lifetime evictions — a 10^10
+        # deployment compacts it into the same bucketed mirror as
+        # url_seen)
+        txn.overwrite("frontier", self._pending(snap))
         txn.truncate("resolved")
         txn.overwrite("host_state", hs_latest)
         txn.overwrite("url_seen", self.cat.read("url_seen", snap), partition_by=["part"])
@@ -1321,14 +1276,9 @@ class CrawlEngine:
             .filter(F.col("url_norm").isNotNull())
             .select("url_norm")
             .distinct()
+            .withColumn("depth", F.lit(0))
         )
-        f = with_url_parts(f)
-        f = politeness.robots_filter(f, hc)
-        f = schedule.with_salt(f, self.cfg.n_salt)
-        f = f.withColumn("depth", F.lit(0))
-        f = politeness.scope_filter(f, self.cfg.graph)
-        f = schedule.with_score(f)
-        pre = f.persist()
+        pre = self._admit(f, hc).persist()
         n = pre.count()
         if n == 0:
             pre.unpersist()
@@ -1418,8 +1368,6 @@ class CrawlEngine:
         last-fetch lookup is the same one partial-aggregated groupBy
         over the scheduled log as revisit(); the reseed path is shared
         (two-phase rank above 64k dues)."""
-        from pyspark.sql import Window
-
         snap = self.cat.current_snapshot()
         now = (snap or {}).get("cycle_id", 0)
         docs = self.cat.read("documents", snap)

@@ -336,7 +336,12 @@ def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFra
     per-endpoint shingle-equality join this replaces; cost stays
     ∝ candidates × shingles-per-doc, never all-pairs. Set sizes are
     bounded by document length, so rows stay task-sized at any corpus
-    scale."""
+    scale.
+
+    ``threshold`` must be > 0 (ValueError otherwise): at 0 a pair that
+    shares no shingle would pass with jac = 0."""
+    if not threshold > 0:
+        raise ValueError(f"jaccard_verify needs threshold > 0, got {threshold}")
     sets = sh.groupBy("id").agg(F.collect_set("shingle").alias("ss"))
     si = sets.select(F.col("id").alias("i"), F.col("ss").alias("s_i"))
     sj = sets.select(F.col("id").alias("j"), F.col("ss").alias("s_j"))

@@ -266,18 +266,24 @@ def _backoff(eng):
     )
 
 
-@functools.cache
-def _forgotten(eng: CrawlEngine) -> CrawlEngine:
-    """A fork of ``eng`` at its last committed cycle (the shared crawl
-    stays untouched) with the 5 lexicographically-first seen URLs
-    forgotten."""
-    last = eng.cat.current_snapshot()["cycle_id"]
-    fork = CrawlEngine.branch_from(
-        eng, last,
+def fork(eng: CrawlEngine) -> CrawlEngine:
+    """A ``branch_from`` fork of ``eng`` at its last committed cycle, in
+    a fresh warehouse: whoever changes a finished crawl (forget,
+    compaction) works on the fork, so a shared ``scenario`` crawl stays
+    untouched."""
+    return CrawlEngine.branch_from(
+        eng, eng.cat.current_snapshot()["cycle_id"],
         replace(eng.cfg, warehouse=tempfile.mkdtemp(prefix="crawlspark-q-")),
     )
-    assert fork.forget(_lex_first(fork, 5))["forgotten"] == 5
-    return fork
+
+
+@functools.cache
+def _forgotten(eng: CrawlEngine) -> CrawlEngine:
+    """A fork of ``eng`` with the 5 lexicographically-first seen URLs
+    forgotten."""
+    f = fork(eng)
+    assert f.forget(_lex_first(f, 5))["forgotten"] == 5
+    return f
 
 
 def _forget_recrawl(eng):

@@ -1,20 +1,15 @@
 """C37 rel=canonical aliasing: variants fetch but never store, the
 declared canonical enters discovery at the variant's depth before the
-slot's links; engine == refsim, both parsing the same page bytes."""
+slot's links. Engine == refsim under the composed page rules is
+tests/test_page_rules.py."""
 
 from __future__ import annotations
 
 import dataclasses
-import tempfile
 
-from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.refsim import RefSim
-from crawlspark.synth import (UNIT_CANON, GraphConfig,
-                              extract_canonical_from_text,
+from crawlspark.synth import (UNIT_CANON, extract_canonical_from_text,
                               extract_links_from_text)
-
-SMALL = GraphConfig(n_sites=3, max_pages=14, batch_size=8, max_cycles=4,
-                    canonical_every=2)
 
 
 def test_parse_helper():
@@ -27,27 +22,6 @@ def test_parse_helper():
     assert extract_links_from_text(
         '<link rel="canonical" href="http://a/p3"> href="http://a/p4"'
     ) == ["http://a/p3", "http://a/p4"]
-
-
-def test_engine_matches_refsim_under_canonicals(spark):
-    ref = RefSim(SMALL).run()
-    eng = CrawlEngine(spark, EngineConfig(graph=SMALL, warehouse=tempfile.mkdtemp()))
-    eng.run()
-    got_order = [
-        (r["cycle_id"], r["batch_pos"], r["url_norm"], r["ok"])
-        for r in eng.crawl_order().collect()
-    ]
-    want_order = [(c, p, u, ok) for (c, p, u, _h, _s, _q, _d, _a, ok) in ref.order]
-    assert got_order == want_order
-    got_docs = {r["doc_id"] for r in eng.documents().select("doc_id").collect()}
-    assert got_docs == set(ref.docs)
-    got_cn = {
-        (r["src"], r["dst"], r["cycle_id"])
-        for r in eng.cat.read("canonicals").collect()
-    }
-    assert got_cn == set(ref.canonicals)
-    got_seen = {r["url_norm"] for r in eng.seen_set().collect()}
-    assert got_seen == set(ref.seen)
 
 
 def test_canonical_semantics_bind():

@@ -1,11 +1,10 @@
 """C35 content-seen test: mirrors resolve but are not stored and mint
-no links; the engine's behavior equals the refsim's sequential rule."""
+no links; the engine's behavior equals the refsim's sequential rule
+(composed with the other page rules in tests/test_page_rules.py)."""
 
 from __future__ import annotations
 
 import tempfile
-
-from pyspark.sql import functions as F
 
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.refsim import RefSim

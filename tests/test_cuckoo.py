@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.operators import cuckoo, seen
+from crawlspark.queries.crawlq import fork, scenario
 from crawlspark.synth import UNIT
 
 N_PARTS = 4
@@ -155,18 +156,10 @@ def test_spark_probe_paths_match_local(spark, folded):
 
 
 @pytest.fixture(scope="module")
-def unit_engines(spark, tmp_path_factory):
-    out = {}
-    for flavor in ("bloom", "cuckoo"):
-        wh = tmp_path_factory.mktemp(f"wh-{flavor}")
-        eng = CrawlEngine(
-            spark,
-            EngineConfig(graph=UNIT, warehouse=str(wh), seen_sidecar=flavor,
-                         cuckoo_nbuckets=1 << 10),
-        )
-        eng.run()
-        out[flavor] = eng
-    return out
+def unit_engines(spark):
+    # the shared UNIT crawls (q80/q87 read the same ones); tests that
+    # change a crawl work on a fork
+    return {flavor: scenario(spark, UNIT, flavor) for flavor in ("bloom", "cuckoo")}
 
 
 def test_engine_cuckoo_matches_bloom(unit_engines):
@@ -181,7 +174,7 @@ def test_engine_cuckoo_matches_bloom(unit_engines):
 
 @pytest.mark.parametrize("flavor", ["bloom", "cuckoo"])
 def test_forget_allows_recrawl(spark, unit_engines, flavor):
-    eng = unit_engines[flavor]
+    eng = fork(unit_engines[flavor])
     snap = eng.cat.current_snapshot()
     victims = [
         r["url_norm"]

@@ -1,6 +1,7 @@
 """C36 robots META directives: noindex pages fetch but never store,
 nofollow pages store but mint no links; the engine honors what it
-PARSES from the page bytes and equals the refsim's independent parse."""
+PARSES from the page bytes and equals the refsim's independent parse
+(composed with the other page rules in tests/test_page_rules.py)."""
 
 from __future__ import annotations
 

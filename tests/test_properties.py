@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.operators import dedup, schedule, seen
+from crawlspark.queries.crawlq import fork, scenario
 from crawlspark.synth import UNIT
 
 
@@ -106,6 +107,9 @@ def test_lsh_recall_on_planted_dups(spark):
         (r["i"], r["j"])
         for r in dedup.jaccard_verify(pairs_all, sh, threshold=0.8).collect()
     }
+    # at threshold 0 a pair sharing no shingle would pass (jac = 0)
+    with pytest.raises(ValueError):
+        dedup.jaccard_verify(pairs_all, sh, threshold=0)
     found = {
         (r["i"], r["j"])
         for r in dedup.minhash_near_dups(
@@ -166,9 +170,7 @@ def test_pack_sequences_distributed_equals_window(spark):
 # -- resume exactness (C16) ------------------------------------------------
 
 def test_resume_bit_identical(spark):
-    wh_full = tempfile.mkdtemp()
-    e1 = CrawlEngine(spark, EngineConfig(graph=UNIT, warehouse=wh_full))
-    e1.run()
+    e1 = scenario(spark, UNIT)  # the shared uninterrupted crawl
 
     wh_resume = tempfile.mkdtemp()
     e2 = CrawlEngine(spark, EngineConfig(graph=UNIT, warehouse=wh_resume))
@@ -236,9 +238,7 @@ def test_resume_after_fold_no_seq_reuse(spark):
 # -- catalog compaction (manifest growth control) -------------------------
 
 def test_catalog_compaction_preserves_content(spark):
-    wh = tempfile.mkdtemp()
-    eng = CrawlEngine(spark, EngineConfig(graph=UNIT, warehouse=wh))
-    eng.run()
+    eng = fork(scenario(spark, UNIT))  # compaction changes the catalog
     snap_before = eng.cat.current_snapshot()
     n_dirs_before = len(snap_before["tables"]["frontier"])
     assert n_dirs_before > 1
@@ -306,10 +306,9 @@ def test_exact_prepass_equivalent_clusters(spark):
 # -- auto-compaction keeps semantics ---------------------------------------
 
 def test_engine_auto_compaction(spark):
-    wh1, wh2 = tempfile.mkdtemp(), tempfile.mkdtemp()
-    e1 = CrawlEngine(spark, EngineConfig(graph=UNIT, warehouse=wh1))
-    e1.run()
-    e2 = CrawlEngine(spark, EngineConfig(graph=UNIT, warehouse=wh2, compact_every=2))
+    e1 = scenario(spark, UNIT)
+    e2 = CrawlEngine(spark, EngineConfig(graph=UNIT, warehouse=tempfile.mkdtemp(),
+                                         compact_every=2))
     e2.run()
     a = [tuple(r) for r in e1.crawl_order().select("cycle_id", "batch_pos", "url_norm").collect()]
     b = [tuple(r) for r in e2.crawl_order().select("cycle_id", "batch_pos", "url_norm").collect()]
@@ -345,8 +344,7 @@ def test_engine_bucketed_seen_mirror(spark):
     import urllib.parse
 
     g = UNIT
-    base = CrawlEngine(spark, EngineConfig(graph=g, warehouse=tempfile.mkdtemp()))
-    base.run()
+    base = scenario(spark, g)
     order_base = [
         tuple(r) for r in base.crawl_order().select("cycle_id", "batch_pos", "url_norm").collect()
     ]

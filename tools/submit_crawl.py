@@ -1,32 +1,18 @@
 """spark-submit driver script: `spark-submit --py-files
-dist/crawlspark.zip tools/submit_crawl.py --warehouse ...`.
+dist/crawlspark.zip tools/submit_crawl.py --warehouse ...` (arguments:
+`python -m crawlspark --help`).
 
 spark-submit provides the SparkSession config via --master/--conf, so
 this driver builds the session from the active context rather than
-crawlspark.session (which is for self-managed local runs)."""
+crawlspark.session (which is for self-managed local runs), then hands
+it to the one crawl CLI, crawlspark.__main__."""
 
 from __future__ import annotations
-
-import argparse
-import json
 
 from pyspark.sql import SparkSession
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--sites", type=int, default=50)
-    ap.add_argument("--max-pages", type=int, default=2000)
-    ap.add_argument("--batch-size", type=int, default=256)
-    ap.add_argument("--cycles", type=int, default=8)
-    ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--n-salt", type=int, default=16)
-    ap.add_argument("--n-seen-parts", type=int, default=16)
-    ap.add_argument("--sidecar", choices=["bloom", "cuckoo"],
-                    default="bloom")
-    args = ap.parse_args()
-
     spark = (
         SparkSession.builder.appName("crawlspark-submit")
         .config("spark.sql.session.timeZone", "UTC")
@@ -35,21 +21,9 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from crawlspark.engine import CrawlEngine, EngineConfig
-    from crawlspark.synth import GraphConfig
+    from crawlspark.__main__ import main as crawl
 
-    g = GraphConfig(
-        seed=args.seed, n_sites=args.sites, max_pages=args.max_pages,
-        batch_size=args.batch_size, max_cycles=args.cycles,
-    )
-    eng = CrawlEngine(
-        spark,
-        EngineConfig(graph=g, warehouse=args.warehouse,
-                     n_salt=args.n_salt, n_seen_parts=args.n_seen_parts,
-                     seen_sidecar=args.sidecar),
-    )
-    for st in eng.run():
-        print(json.dumps(st))
+    crawl(spark=spark)
 
 
 if __name__ == "__main__":

@@ -70,8 +70,9 @@ FRONTIER_COLS = [
 
 # Graphs at or under this many pages (n_sites × max_pages) are
 # "unit tier": contract scenarios whose whole state fits one task.
-# Their wall time is pure per-job scheduling overhead, so the engine
-# right-sizes the session while ITS jobs run (see CrawlEngine._tuned).
+# Their wall time is pure per-task scheduling overhead, so the engine
+# also clamps the shuffle width while ITS jobs run; AQE is off in the
+# engine's window at every tier (see CrawlEngine._tuned).
 UNIT_TIER_PAGES_MAX = 4096
 
 
@@ -119,10 +120,11 @@ class EngineConfig:
     # Bounds warehouse growth on long crawls: without it every cycle's
     # pre-fold file set stays referenced by old manifests forever.
     expire_keep_last: int = 0
-    # right-size session confs (shuffle width, AQE) while unit-tier
-    # scenario cycles run — results are parallelism-independent
+    # right-size session confs while the engine's calls run: AQE off
+    # at every tier, shuffle width ≤ 8 for unit-tier graphs (see
+    # CrawlEngine._tuned) — results are parallelism-independent
     # (tests/test_refsim_equivalence.py pins it), so this is pure
-    # harness-cost control. The parallelism-determinism gate itself
+    # cost control. The parallelism-determinism gate itself
     # switches it off to keep its width override meaningful.
     auto_tune: bool = True
 
@@ -141,44 +143,51 @@ class CrawlEngine:
 
     @contextmanager
     def _tuned(self):
-        """Unit-tier scenario crawls (≤ UNIT_TIER_PAGES_MAX pages) are
-        fixed-cost-bound: every cycle's state fits one task, so wall
-        time is the NUMBER of scheduled jobs × per-job latency, and a
-        32-way shuffle width plus AQE's extra re-optimization job
-        rounds only multiply that latency (measured: UNIT_CLOCK 8
-        cycles ~100s at width 32 + AQE vs ~74s at width 8, AQE off,
-        same machine load — commit phase on sweep cycles 8-22s → 3.6s).
-        Results are parallelism-independent (determinism gates in
-        tests/test_refsim_equivalence.py), so this changes cost only.
-        Confs are restored on exit; BENCH/DESIGN/T2-tier graphs and
-        engines with auto_tune=False are untouched.
+        """The engine's session window, opened by every engine entry
+        point (reentrant: nested calls inherit the outermost window).
+
+        AQE is off inside it at every tier. The engine sizes its own
+        shuffles (salt, seen-part and batch widths), so AQE has nothing
+        to coalesce and only splits each action into one job per
+        shuffle stage with driver re-planning in between. Measured on
+        perfbench crawl_capped (seed 7, local[4] on a 4-core machine),
+        together with deriving the pending frontier once (run_cycle):
+        72 → 33 jobs per cycle, and a cycle's median 10.2 s → 7.8 s
+        over 10 alternating runs each.
+
+        Unit-tier crawls (≤ UNIT_TIER_PAGES_MAX pages) also run at a
+        shuffle width of at most 8: every cycle's state fits one task,
+        so wall time is the number of tasks × per-task latency
+        (measured: UNIT_CLOCK 8 cycles ~100s at width 32 + AQE vs ~74s
+        at width 8, AQE off). Results are parallelism-independent
+        (determinism gates in tests/test_refsim_equivalence.py), so
+        both confs change cost only. They are restored on exit, and
+        engines with auto_tune=False leave the session untouched.
 
         The confs are SESSION-GLOBAL, not engine-local: while the window
         is open, every job on the session — another engine's, or an
-        ad-hoc query from another thread — runs at width ≤ 8 with AQE
-        off. This assumes one engine runs on a session at a time (the
-        harness and the CLI are single-threaded); give concurrent
-        engines separate sessions or auto_tune=False."""
-        g = self.cfg.graph
-        if (
-            self._tune_depth
-            or not self.cfg.auto_tune
-            or g.n_sites * g.max_pages > UNIT_TIER_PAGES_MAX
-        ):
+        ad-hoc query from another thread — runs with AQE off (and, for
+        a unit-tier engine, at width ≤ 8). This assumes one engine runs
+        on a session at a time (the harness and the CLI are
+        single-threaded); give concurrent engines separate sessions or
+        auto_tune=False."""
+        if self._tune_depth or not self.cfg.auto_tune:
             self._tune_depth += 1
             try:
                 yield
             finally:
                 self._tune_depth -= 1
             return
+        g = self.cfg.graph
         conf = self.spark.conf
         keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
         saved = {k: conf.get(k) for k in keys}
         self._tune_depth += 1
         try:
-            width = min(int(saved["spark.sql.shuffle.partitions"]), 8)
-            conf.set("spark.sql.shuffle.partitions", str(width))
             conf.set("spark.sql.adaptive.enabled", "false")
+            if g.n_sites * g.max_pages <= UNIT_TIER_PAGES_MAX:
+                width = min(int(saved["spark.sql.shuffle.partitions"]), 8)
+                conf.set("spark.sql.shuffle.partitions", str(width))
             yield
         finally:
             self._tune_depth -= 1
@@ -655,14 +664,19 @@ class CrawlEngine:
         # cycle (bounded between folds; the eviction log by total
         # evictions) — the full `scheduled` history log is never
         # scanned here. A failed attempt re-queues with its original
-        # (score, seq): the batch TTR-re-release analogue.
+        # (score, seq): the batch TTR-re-release analogue. It is
+        # derived once per cycle: the per-host cap, the C40 ring count,
+        # the C39 ref-bit probe and the sweep's pending set all read
+        # this cache instead of re-reading and re-joining the tables.
         keys = ["url_hash", "url_norm"]
-        queued = (
+        queued_base = (
             self._pending(snap)
             .join(retry, keys, "left")
             .withColumn("attempt", (F.coalesce("n_fail", F.lit(0)) + 1).cast("int"))
             .drop("n_fail")
+            .persist()
         )
+        queued = queued_base
         if g.priority_aging_every:
             # C34: drain-time priority aging — the effective score is
             # derived column math off the stored admission cycle, so a
@@ -726,8 +740,8 @@ class CrawlEngine:
         n_sched = docs.count()
         t_fetch = time.time()
         if n_sched == 0:
-            batch.unpersist()
-            docs.unpersist()
+            for df in (queued_base, batch, docs):
+                df.unpersist()
             return {"cycle": c, "scheduled": 0, "deduped": 0, "discovered": 0,
                     "wall_ms": int((time.time() - t0) * 1000), "stop": True}
         pages, page_writes = self._page_fate(
@@ -1029,7 +1043,9 @@ class CrawlEngine:
         # commit phase 3.9s → 6.5s — the staged writes already run
         # concurrently in threads, so 32-task writes overlap across
         # cores while single-task writes serialize. Keep the parallel
-        # writers at every tier.
+        # writers at every tier. With AQE off (CrawlEngine._tuned) the
+        # crawl_capped commit phase (4 cores) is 3.4 s: 23 jobs, 27
+        # files; it was 5.1 s, 38 jobs and 33 files with AQE on.
         writes = [
             (
                 "append",
@@ -1098,7 +1114,7 @@ class CrawlEngine:
         )
         self._mirror_append(novel_rows, new_snap)
 
-        for df in (batch, docs, cand, novel_probed, novel_rows, sched_rows):
+        for df in (queued_base, batch, docs, cand, novel_probed, novel_rows, sched_rows):
             df.unpersist()
         schedule.release_scratch()
         seen.release_broadcasts(self.spark)

@@ -40,10 +40,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_anti_join(
     candidates: DataFrame, spark: SparkSession, seen_table: str, keys: list[str]
 ) -> DataFrame:

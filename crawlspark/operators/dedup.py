@@ -315,15 +315,6 @@ def _band_self_join(bandkey: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
-    """(i, j) candidate pairs sharing ≥1 LSH band (i < j).
-
-    band_hash = md5-60 of the band's concatenated minhashes; the
-    self-join shuffles on (band, band_hash) only."""
-    # both sides of the self-join read this once (n_docs × bands rows)
-    return _band_self_join(band_keys(sig, n_hashes, bands))
-
-
 def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard for candidate pairs only → (i, j, jac ≥ threshold).
 

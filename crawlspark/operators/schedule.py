@@ -232,7 +232,10 @@ def pattern_cap(
     survivors. The prior join is a shuffle join on the pattern key
     (the pattern table outgrows a broadcast at web scale); hot
     patterns have exactly one build row, so skew sits on the probe
-    side where AQE splits it.
+    side. AQE splits it on an AQE session; the engine runs with AQE
+    off (CrawlEngine._tuned), where a pattern table under the
+    broadcast threshold broadcasts and a larger one leaves a hot
+    pattern's probe rows in one task.
 
     ``keys`` generalizes the budget scope: ("host",) gives C38's
     per-host lifetime page budget (Heritrix max-pages-per-host) over

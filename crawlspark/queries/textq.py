@@ -1643,8 +1643,8 @@ def q133_data_budget(spark, sf):
     each source's target token allocation and the repetition factor
     (epochs = ceil(target/available)) a mix planner schedules before
     launching a run. Every allocation step is exact 64-bit integer
-    arithmetic (`div`; one float divide only for the reported budget
-    share), so the plan replays identically across engines,
+    arithmetic (`div`, the budget share too, as integer parts per
+    million), so the plan replays bit-identically across engines,
     partitionings and resumes. One scalar collect (the weight total);
     everything else is a partial-agg groupBy on source."""
     d = T(spark, sf, "documents").withColumn(
@@ -1656,14 +1656,12 @@ def q133_data_budget(spark, sf):
         .withColumn("weight", (md5hash60(F.col("source")) % 4 + 1).cast("long"))
     )
     wtot = int(per.agg(F.sum("weight").alias("w")).collect()[0]["w"])
-    tgt = F.expr(f"({BUDGET133} * weight) div {wtot}")
+    tgt = f"(({BUDGET133} * weight) div {wtot})"
     return per.select(
         "source", "n_tokens", "weight",
-        tgt.alias("target_tokens"),
-        F.expr(
-            f"(({BUDGET133} * weight) div {wtot} + n_tokens - 1) div n_tokens"
-        ).alias("epochs"),
-        F.round(tgt.cast("double") / F.lit(float(BUDGET133)), 6).alias("budget_share"),
+        F.expr(tgt).alias("target_tokens"),
+        F.expr(f"({tgt} + n_tokens - 1) div n_tokens").alias("epochs"),
+        F.expr(f"(1000000 * {tgt}) div {BUDGET133}").alias("budget_ppm"),
     )
 
 
@@ -1673,11 +1671,11 @@ WITH per AS (
          CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS n_tokens,
          CAST({_H("source")} % 4 + 1 AS BIGINT) AS weight
   FROM documents GROUP BY source),
-wt AS (SELECT sum(weight) AS w FROM per)
+wt AS (SELECT CAST(sum(weight) AS BIGINT) AS w FROM per)
 SELECT source, n_tokens, weight,
        ({BUDGET133} * weight) // (SELECT w FROM wt) AS target_tokens,
        (({BUDGET133} * weight) // (SELECT w FROM wt) + n_tokens - 1) // n_tokens AS epochs,
-       round(CAST(({BUDGET133} * weight) // (SELECT w FROM wt) AS DOUBLE) / {BUDGET133}, 6) AS budget_share
+       (1000000 * (({BUDGET133} * weight) // (SELECT w FROM wt))) // {BUDGET133} AS budget_ppm
 FROM per
 """
 

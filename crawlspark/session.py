@@ -67,7 +67,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def tune_for_session(spark: SparkSession, shuffle_partitions: int) -> None:
-    """Adjust per-query parallelism without rebuilding the session."""
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))

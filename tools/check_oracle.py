@@ -7,6 +7,11 @@ values (floats to 1e-9 after in-query rounding). This is a local
 stand-in for the driver's CORRECTNESS_r{N}.json gate so query/oracle
 pairs can be iterated quickly.
 
+A crawl query's finished crawl (``crawlq.scenario``, memoized per
+preset) is run and timed on its own before the query, so each line
+reports a ``crawl`` time (the first reader of a preset pays it, later
+readers show ~0) apart from the ``query`` time.
+
 Usage: python tools/check_oracle.py [sf_dir] [name_filter ...]
 """
 
@@ -48,11 +53,29 @@ def canon_rows(cols, rows):
     ), [cols[i] for i in order]
 
 
+def crawl_of(name):
+    """(preset, sidecar) of the scenario crawl a query reads, or None."""
+    from crawlspark.queries import crawlq
+    from crawlspark.synth import UNIT
+
+    if name in crawlq.CRAWLS:
+        return crawlq.CRAWLS[name].preset, crawlq.CRAWLS[name].sidecar
+    if name == "q93_crawl_stream_rates":  # streams the UNIT crawl's log
+        return UNIT, "bloom"
+    return None
+
+
+def took(t_crawl, t0):
+    crawl = "-" if t_crawl is None else f"{t_crawl:.1f}s"
+    return f"crawl {crawl}, query {time.time() - t0:.1f}s"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
 
     import __spark_entry__ as E
+    from crawlspark.queries.crawlq import scenario
     from crawlspark.session import get_spark
 
     spark = get_spark("oracle-check")
@@ -67,8 +90,14 @@ def main():
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
-        t0 = time.time()
+        t_crawl = None
         try:
+            crawl = crawl_of(name)
+            if crawl is not None:
+                t0 = time.time()
+                scenario(spark, *crawl)
+                t_crawl = time.time() - t0
+            t0 = time.time()
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
@@ -77,7 +106,7 @@ def main():
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
+            print(f"ok   {name}: rows-only ({len(s_rows)} rows, {took(t_crawl, t0)})")
             n_pass += 1
             continue
         try:
@@ -116,7 +145,7 @@ def main():
             print(f"FAIL {name}: values differ; first diffs: {diff}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(s_canon)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({len(s_canon)} rows, {took(t_crawl, t0)})")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)

@@ -22,7 +22,6 @@ tail queries).
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import tempfile
@@ -30,27 +29,6 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-def canon_value(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return round(v, 9)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()[:26]
-    if isinstance(v, list):
-        return tuple(canon_value(x) for x in v)
-    return v
-
-
-def canon_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        tuple(canon_value(r[i]) for i in order) for r in rows
-    ), [cols[i] for i in order]
 
 
 def main():
@@ -74,11 +52,12 @@ def main():
     sys.path.insert(0, str(REPO))
     import __spark_entry__ as E
 
+    # the one comparator, by absolute path (the CWD is foreign by now)
+    sys.path.insert(0, str(REPO / "tools"))
+    from check_oracle import TABLES, canon_rows
+
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

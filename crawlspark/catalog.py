@@ -14,6 +14,12 @@ manifest layer over partitioned Parquet:
   `cycle_id`; resume re-reads the last committed manifest, so a crash
   mid-cycle leaves only orphan data dirs that no manifest references.
 
+A table with no data dirs in the pinned snapshot reads as an empty
+JVM LocalRelation (`session.local_frame`): collecting it runs no Spark
+job, and the planner drops an anti or outer join against it, so the
+cycle's joins against still-empty tables (resolved, evictions,
+retry_state on a young crawl) cost no shuffle.
+
 Layout::
 
     warehouse/
@@ -35,6 +41,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import TABLE_SCHEMAS
+from .session import local_frame
 
 
 class Catalog:
@@ -81,11 +88,13 @@ class Catalog:
     # -- reads -------------------------------------------------------------
 
     def read(self, table: str, snap: dict | None = None) -> DataFrame:
-        """Read a table pinned to a snapshot (default: current)."""
+        """Read a table pinned to a snapshot (default: current). A table
+        with no dirs is an empty LocalRelation, which Catalyst's
+        empty-relation propagation prunes out of joins at planning."""
         snap = snap if snap is not None else self.current_snapshot()
         dirs = (snap or {}).get("tables", {}).get(table, [])
         if not dirs:
-            return self.spark.createDataFrame([], TABLE_SCHEMAS[table])
+            return local_frame(self.spark, [], TABLE_SCHEMAS[table])
         # Each staged dir is its own partitioned-parquet root; union them
         # (manifest-listed dirs ≈ Iceberg manifests listing data files).
         parts = [

@@ -53,6 +53,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .catalog import Catalog
 from .gen import host_config_df, seeds_df
@@ -60,6 +61,7 @@ from .operators import fetch as fetch_ops
 from .operators import clock, cuckoo, politeness, schedule, seen
 from .portable import md5hash60
 from .schemas import CLOCK_STATE, METRICS
+from .session import local_frame
 from .synth import GraphConfig
 from .urlnorm import canonicalize_udf, resolve_canonicalize_udf, with_url_parts
 
@@ -67,6 +69,8 @@ FRONTIER_COLS = [
     "url_norm", "url_hash", "host", "host_salt", "depth",
     "site_priority", "score", "seq", "discovered_from", "cycle_id",
 ]
+# an operator's URL list (forget / reseed) as a one-column frame
+_URLS = T.StructType([T.StructField("url", T.StringType(), True)])
 
 # Graphs at or under this many pages (n_sites × max_pages) are
 # "unit tier": contract scenarios whose whole state fits one task.
@@ -351,7 +355,9 @@ class CrawlEngine:
     def _clock_hand(self, snap) -> int:
         """C39: the admission seq the next eviction sweep resumes at
         (single-row clock_state table; 0 before the first sweep =
-        plain seq order). One bounded collect, only at sweep time."""
+        plain seq order). One bounded collect, only at sweep time;
+        before the first sweep the table is an empty LocalRelation and
+        the collect runs no job."""
         rows = self.cat.read("clock_state", snap).collect()
         return int(rows[0]["hand"]) if rows else 0
 
@@ -528,9 +534,7 @@ class CrawlEngine:
             "host", F.col("token_capacity").alias("tokens"),
             F.lit(0).cast("long").alias("last_cycle"),
         )
-        m0 = self.spark.createDataFrame(
-            [(0, -1, n_seeds, 0, 0, 0, 0)], METRICS
-        )
+        m0 = local_frame(self.spark, [(0, -1, n_seeds, 0, 0, 0, 0)], METRICS)
         txn = self.cat.begin()
         txn.append("frontier", frontier0)
         txn.append("url_seen", seen0, partition_by=["part"])
@@ -977,7 +981,7 @@ class CrawlEngine:
                     ("overwrite", "ref_bits",
                      bits_kept.withColumn("cycle_id", F.lit(c).cast("long")), None),
                     ("overwrite", "clock_state",
-                     self.spark.createDataFrame([(int(new_hand), c)], CLOCK_STATE),
+                     local_frame(self.spark, [(int(new_hand), c)], CLOCK_STATE),
                      None),
                 ]
             elif n_ref:
@@ -1005,7 +1009,8 @@ class CrawlEngine:
         salts = sorted(
             set(per_salt) | {i for i in range(self.cfg.n_salt) if q_in[f"s{i}"]}
         )
-        metrics = self.spark.createDataFrame(
+        metrics = local_frame(
+            self.spark,
             [
                 (
                     c, s, int(q_in[f"s{s}"] or 0),
@@ -1043,9 +1048,13 @@ class CrawlEngine:
         # commit phase 3.9s → 6.5s — the staged writes already run
         # concurrently in threads, so 32-task writes overlap across
         # cores while single-task writes serialize. Keep the parallel
-        # writers at every tier. With AQE off (CrawlEngine._tuned) the
-        # crawl_capped commit phase (4 cores) is 3.4 s: 23 jobs, 27
-        # files; it was 5.1 s, 38 jobs and 33 files with AQE on.
+        # writers at every tier. With AQE off (CrawlEngine._tuned) and
+        # the metrics / clock_state rows built as LocalRelations
+        # (session.local_frame), the crawl_capped commit phase (4 cores,
+        # median of 3 traced runs) is 2.0 s: 22 jobs, 26 stages, 54
+        # tasks, 25 files. With those rows pickled into Python RDDs it
+        # was 2.8 s: 23 jobs, 29 stages, 88 tasks, 27 files; with AQE
+        # on as well, 5.1 s, 38 jobs and 33 files.
         writes = [
             (
                 "append",
@@ -1208,7 +1217,7 @@ class CrawlEngine:
         `urls`: DataFrame with a `url` column (canonicalized here) or
         an iterable of URL strings. Returns {"forgotten": n}."""
         if not isinstance(urls, DataFrame):
-            urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
+            urls = local_frame(self.spark, [(u,) for u in urls], _URLS)
         req = (
             urls.withColumn("url_norm", canonicalize_udf("url"))
             .filter(F.col("url_norm").isNotNull())
@@ -1281,7 +1290,7 @@ class CrawlEngine:
         rank as C18 when a bulk revisit() re-queues more than ~64k
         URLs — no single-partition funnel at web scale."""
         if not isinstance(urls, DataFrame):
-            urls = self.spark.createDataFrame([(u,) for u in urls], "url string")
+            urls = local_frame(self.spark, [(u,) for u in urls], _URLS)
         urls = urls.persist()
         self.forget(urls)
         snap = self.cat.current_snapshot()

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .schemas import HOST_CONFIG
+from .session import local_frame
 from .synth import GraphConfig
 
 SEEDS_SCHEMA = T.StructType(
@@ -24,7 +25,7 @@ SEEDS_SCHEMA = T.StructType(
 
 def seeds_df(spark: SparkSession, cfg: GraphConfig) -> DataFrame:
     rows = [(i, u) for i, u in enumerate(cfg.seeds())]
-    return spark.createDataFrame(rows, SEEDS_SCHEMA)
+    return local_frame(spark, rows, SEEDS_SCHEMA)
 
 
 def host_config_df(spark: SparkSession, cfg: GraphConfig) -> DataFrame:
@@ -39,4 +40,4 @@ def host_config_df(spark: SparkSession, cfg: GraphConfig) -> DataFrame:
         )
         for i in range(cfg.n_sites)
     ]
-    return spark.createDataFrame(rows, HOST_CONFIG)
+    return local_frame(spark, rows, HOST_CONFIG)

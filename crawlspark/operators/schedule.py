@@ -18,6 +18,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import local_frame
+
+# the two-phase rank's per-partition row offsets (driver-built)
+_OFFSETS = T.StructType(
+    [T.StructField("_pid", T.IntegerType(), True), T.StructField("_off", T.LongType(), True)]
+)
 
 
 def with_salt(df: DataFrame, n_salt: int) -> DataFrame:
@@ -92,6 +100,28 @@ def release_scratch() -> None:
     _SCRATCH.clear()
 
 
+def _range_offsets(df: DataFrame, order_cols: list[str]) -> tuple[DataFrame, DataFrame]:
+    """Phase 1 of the two-phase rank: `df` range-partitioned on the
+    order key, cached and tagged with its partition id `_pid`, and a
+    driver-built frame of each partition's starting row offset `_off`
+    (the driver collects P row counts, never rows)."""
+    spark = df.sparkSession
+    ranged = (
+        df.repartitionByRange(
+            spark.sparkContext.defaultParallelism, *[F.col(c) for c in order_cols]
+        )
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    _SCRATCH.append(ranged)
+    counts = ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
+    offsets, acc = [], 0
+    for r in sorted(counts, key=lambda r: r["_pid"]):
+        offsets.append((r["_pid"], acc))
+        acc += r["n"]
+    return ranged, local_frame(spark, offsets, _OFFSETS)
+
+
 def global_schedule(capped: DataFrame, batch_size: int) -> DataFrame:
     """C10: the cycle's fetch batch, with its position in the crawl
     ordering. This IS the ordering contract vs the reference.
@@ -111,25 +141,7 @@ def global_schedule(capped: DataFrame, batch_size: int) -> DataFrame:
         w = Window.orderBy("score", "seq")
         return batch.withColumn("batch_pos", F.row_number().over(w).cast("long"))
 
-    spark = capped.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    ranged = (
-        capped.repartitionByRange(n_part, F.col("score"), F.col("seq"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    _SCRATCH.append(ranged)
-    counts = {
-        r["_pid"]: r["n"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-    )
+    ranged, off_df = _range_offsets(capped, ["score", "seq"])
     w = Window.partitionBy("_pid").orderBy("score", "seq")
     out = (
         ranged.join(F.broadcast(off_df), "_pid")
@@ -166,26 +178,7 @@ def rank_seq(
             out_col, (F.lit(base_seq) + F.row_number().over(w)).cast("long")
         )
 
-    spark = df.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    _SCRATCH.append(ranged)
-    counts = {
-        r["_pid"]: r["n"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-        "_pid int, _off long",
-    )
+    ranged, off_df = _range_offsets(df, order_cols)
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     return (
         ranged.join(F.broadcast(off_df), "_pid")

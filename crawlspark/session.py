@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # JVM-native helpers (Bloom probe) compiled offline by
 # tools/build_native.sh; sessions we build load it, foreign sessions
@@ -67,3 +68,22 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-side rows (tuples in `schema` field order) as a JVM
+    LocalRelation with exactly `schema`, nullability included.
+
+    `createDataFrame(list, schema)` pickles the rows into a Python RDD
+    whose every partition runs a Python-worker task, and the planner
+    cannot prove it empty. An Arrow table always takes the Arrow path,
+    whatever the session's Arrow setting, and lands as a LocalRelation:
+    collecting it runs no job, and Catalyst's empty-relation rules drop
+    an anti or outer join against an empty one at planning time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

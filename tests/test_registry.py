@@ -50,3 +50,30 @@ def test_crawl_oracles_build_without_spark():
     assert set(reg["oracles"]) <= set(reg["queries"])
     # every crawl oracle reads a refsim table that exists and has rows
     assert all(reg["rows"][n] > 0 for n in reg["crawl"])
+
+
+def test_no_oracle_column_is_hugeint_or_decimal():
+    """Registry lint: DuckDB types an unguarded integer sum or product
+    HUGEINT (Arrow decimal128) where Spark types it LONG, so the two
+    sides' values hash apart (q133's old failure mode). DESCRIBE every
+    oracle's output over the sf0.001 views; no column may be HUGEINT
+    or DECIMAL."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from crawlspark.queries.relational import _write_seed_files
+    from tests.test_curation import SF
+
+    _write_seed_files()  # the q35/q36 oracles scan these files
+    con = duckdb.connect()
+    for p in sorted(Path(SF).glob("*.parquet")):
+        con.execute(f"CREATE VIEW {p.stem} AS SELECT * FROM read_parquet('{p}')")
+    oracles = E.oracle_sql()
+    wide = {
+        (name, col, typ)
+        for name, sql in oracles.items()
+        for col, typ, *_ in con.execute(f"DESCRIBE {sql}").fetchall()
+        if typ.startswith(("HUGEINT", "DECIMAL"))
+    }
+    assert len(oracles) > 150
+    assert wide == set()

@@ -23,8 +23,8 @@ Dataflow (shuffle boundaries marked):
     canonicalize/robots/score      → candidates       [narrow + broadcast join]
     window dedup (url_norm)        → deduped          [shuffle: url_norm]
     sidecar probe + exact anti     → novel            [shuffle: part / url_hash;
-                                                       bloom or cuckoo filter
-                                                       per EngineConfig]
+                                                       one probe for either
+                                                       kind (operators/seen.py)]
     seq rank + appends + commit                       [writes]
 
 Growth discipline (the 10^10-URL design point): the cycle reads only
@@ -58,7 +58,9 @@ from pyspark.sql import types as T
 from .catalog import Catalog
 from .gen import host_config_df, seeds_df
 from .operators import fetch as fetch_ops
-from .operators import clock, cuckoo, politeness, schedule, seen
+from .operators import clock, politeness, schedule, seen
+from .operators.cuckoo import NBUCKETS_DEFAULT, Cuckoo
+from .operators.seen import Bloom
 from .portable import md5hash60
 from .schemas import CLOCK_STATE, METRICS
 from .session import local_frame
@@ -99,8 +101,6 @@ class EngineConfig:
     warehouse: str = "/tmp/crawlspark-warehouse"
     n_seen_parts: int = 16
     n_salt: int = 8
-    bloom_nbits: int = seen.NBITS_DEFAULT
-    bloom_k: int = seen.K_DEFAULT
     # compact append-heavy tables every N cycles (0 = never): bounds
     # manifest length + small-file count on long crawls
     compact_every: int = 0
@@ -112,13 +112,14 @@ class EngineConfig:
     # append only cost a rebuild, never correctness.
     bucketed_seen: bool = False
     seen_buckets: int = 64
-    # URL-seen sidecar flavor (north rule: "bloom/cuckoo URL-seen").
-    # "bloom": insert-only bitsets (operators/seen.py — smallest, JVM
-    # native fold/probe). "cuckoo": 16-bit-fingerprint cuckoo filter
-    # (operators/cuckoo.py — supports in-place deletion, so forget()
-    # edits the sidecar instead of rebuilding touched parts).
+    # URL-seen sidecar kind (north rule: "bloom/cuckoo URL-seen"), one
+    # C4/C5 path in operators/seen.py for both. "bloom": insert-only
+    # bitsets (seen.Bloom — smallest; forget() rebuilds touched parts).
+    # "cuckoo": 16-bit-fingerprint cuckoo filter (cuckoo.Cuckoo, sized
+    # by cuckoo_nbuckets — deletes in place, so forget() edits the
+    # touched parts). Any other value is refused.
     seen_sidecar: str = "bloom"
-    cuckoo_nbuckets: int = cuckoo.NBUCKETS_DEFAULT
+    cuckoo_nbuckets: int = NBUCKETS_DEFAULT
     # after each fold_state, expire snapshots beyond the newest N and
     # GC their data dirs (0 = keep all history / full time travel).
     # Bounds warehouse growth on long crawls: without it every cycle's
@@ -137,6 +138,13 @@ class CrawlEngine:
     def __init__(self, spark: SparkSession, cfg: EngineConfig):
         # refuses an invalid crawl policy (the refsim calls the same rule)
         self.admission_cap = cfg.graph.admission_cap()
+        # the one place the sidecar kind is chosen
+        kinds = {"bloom": Bloom(), "cuckoo": Cuckoo(cfg.cuckoo_nbuckets)}
+        if cfg.seen_sidecar not in kinds:
+            raise ValueError(
+                f"seen_sidecar must be one of {sorted(kinds)}, not {cfg.seen_sidecar!r}"
+            )
+        self.sidecar = kinds[cfg.seen_sidecar]
         self.spark = spark
         self.cfg = cfg
         self.cat = Catalog(spark, cfg.warehouse)
@@ -411,47 +419,6 @@ class CrawlEngine:
         )
         self._mirror_marker().write_text(f"{self._mirror_table}:{new_snap['id']}")
 
-    @property
-    def _broadcast_bloom(self) -> bool:
-        """Probe strategy from config alone — no per-cycle Spark jobs
-        spent deciding (the sidecar size is fixed by construction:
-        n_parts × nbits/8 for Bloom, n_parts × 2·nbuckets·4 for
-        cuckoo)."""
-        if self.cfg.seen_sidecar == "cuckoo":
-            row = 2 * self.cfg.cuckoo_nbuckets * cuckoo.BUCKET_SIZE
-        else:
-            row = self.cfg.bloom_nbits // 8
-        return self.cfg.n_seen_parts * row <= seen.BROADCAST_BLOOM_MAX_BYTES
-
-    @property
-    def _sidecar_table(self) -> str:
-        return "cuckoo_seen" if self.cfg.seen_sidecar == "cuckoo" else "bloom_seen"
-
-    def _fold_sidecar(self, new_hashes: DataFrame, sidecar: DataFrame, c: int) -> DataFrame:
-        """C5 fold for whichever sidecar is configured; new_hashes must
-        carry (part, url_hash) of this cycle's novel rows only."""
-        if self.cfg.seen_sidecar == "cuckoo":
-            return cuckoo.fold_cuckoo(
-                new_hashes, sidecar, cycle_id=c, nbuckets=self.cfg.cuckoo_nbuckets
-            )
-        return seen.fold_bloom(
-            new_hashes, sidecar, cycle_id=c,
-            nbits=self.cfg.bloom_nbits, k=self.cfg.bloom_k,
-        )
-
-    def _seen_filter(self, cand, url_seen, sidecar, snap) -> DataFrame:
-        """C4 dispatch: probe the configured sidecar, exact anti-join
-        the survivors (identical exactness contract on both paths)."""
-        if self.cfg.seen_sidecar == "cuckoo":
-            return cuckoo.seen_filter(
-                cand, url_seen, sidecar, broadcast_filter=self._broadcast_bloom,
-                seen_mirror=self._ensure_seen_mirror(snap),
-            )
-        return seen.seen_filter(
-            cand, url_seen, sidecar, broadcast_bloom=self._broadcast_bloom,
-            seen_mirror=self._ensure_seen_mirror(snap),
-        )
-
     def _host_config(self) -> DataFrame:
         return host_config_df(self.spark, self.cfg.graph)
 
@@ -525,9 +492,9 @@ class CrawlEngine:
             "url_hash", "url_norm", F.lit(0).cast("long").alias("first_cycle"),
             self._part().alias("part"),
         )
-        bloom0 = self._fold_sidecar(
-            seen0.select("part", "url_hash"),
-            self.cat.read(self._sidecar_table),  # empty
+        bloom0 = seen.fold(
+            self.sidecar, seen0.select("part", "url_hash"),
+            self.cat.read(self.sidecar.table),  # empty
             0,
         )
         hs0 = self._pol_hc(hc).select(
@@ -543,7 +510,7 @@ class CrawlEngine:
             txn.append(cap.counts, f0.groupBy(*cap.scope).agg(
                 F.count("*").cast("long").alias("n")
             ))
-        txn.overwrite(self._sidecar_table, bloom0)
+        txn.overwrite(self.sidecar.table, bloom0)
         txn.overwrite("host_state", hs0)
         txn.overwrite("host_config", hc)
         txn.append("metrics", m0)
@@ -658,7 +625,7 @@ class CrawlEngine:
         g = self.cfg.graph
         snap = self.cat.current_snapshot()
         url_seen = self.cat.read("url_seen", snap)
-        bloom = self.cat.read(self._sidecar_table, snap)
+        bloom = self.cat.read(self.sidecar.table, snap)
         host_state = self.cat.read("host_state", snap)
         hc = self.cat.read("host_config", snap)
         retry = self.cat.read("retry_state", snap)
@@ -805,7 +772,13 @@ class CrawlEngine:
         # keep the persisted probe result under its own name: unpersist
         # needs the exact cached plan, so rebinding this to the
         # assign_seq output would leak one cache entry per cycle
-        novel_probed = self._seen_filter(cand, url_seen, bloom, snap)
+        novel_probed = seen.seen_filter(
+            cand, url_seen, bloom,
+            # from config alone: the sidecar's size is fixed by construction
+            broadcast_bloom=self.cfg.n_seen_parts * self.sidecar.row_bytes
+            <= seen.BROADCAST_BLOOM_MAX_BYTES,
+            seen_mirror=self._ensure_seen_mirror(snap),
+        )
         cap = self.admission_cap
         if cap is not None:
             # C23/C38/C40 admission cap (GraphConfig.admission_cap),
@@ -1002,7 +975,7 @@ class CrawlEngine:
             F.lit(c).cast("long").alias("last_cycle"),
         )
 
-        bloom_new = self._fold_sidecar(novel_rows.select("part", "url_hash"), bloom, c)
+        bloom_new = seen.fold(self.sidecar, novel_rows.select("part", "url_hash"), bloom, c)
         self.max_seq += n_novel
         wall_ms = int((time.time() - t0) * 1000)
         per_salt = {int(r["host_salt"]): r for r in stat_rows}
@@ -1082,7 +1055,7 @@ class CrawlEngine:
                     ),
                     ["part"],
                 ),
-                ("overwrite", self._sidecar_table, bloom_new, None),
+                ("overwrite", self.sidecar.table, bloom_new, None),
                 ("append", "edges", edges_delta, None),
             ]
             if cap is not None and cap.counts:
@@ -1205,7 +1178,8 @@ class CrawlEngine:
         never reused (max_seq stays monotone), so re-crawled rows sort
         strictly after their first crawl in the ordering contract.
 
-        Sidecar handling is where the bloom/cuckoo choice shows:
+        Sidecar handling is where the bloom/cuckoo choice shows
+        (seen.forget):
         - cuckoo: fingerprints are deleted IN PLACE (O(1) per key,
           only touched parts rewritten) — sound because the targets
           are semi-joined against the exact table first and the fold
@@ -1228,7 +1202,7 @@ class CrawlEngine:
         snap = self.cat.current_snapshot()
         keys = ["url_hash", "url_norm"]
         url_seen = self.cat.read("url_seen", snap)
-        sidecar = self.cat.read(self._sidecar_table, snap)
+        sidecar = self.cat.read(self.sidecar.table, snap)
         targets = url_seen.join(req, keys, "left_semi").persist()
         n = targets.count()
         if n == 0:
@@ -1236,20 +1210,7 @@ class CrawlEngine:
             return {"forgotten": 0}
         remaining = url_seen.join(targets.select(*keys), keys, "left_anti")
         cyc = (snap or {}).get("cycle_id", 0)
-        if self.cfg.seen_sidecar == "cuckoo":
-            sidecar_new = cuckoo.delete_cuckoo(
-                targets.select("part", "url_hash"), sidecar, cycle_id=cyc
-            )
-        else:
-            # rebuild only the touched parts from their remaining keys;
-            # a touched part left empty simply has no row (probe: False,
-            # which is exact — nothing remains in url_seen there either)
-            touched = targets.select("part").distinct()
-            sidecar_new = seen.fold_bloom(
-                remaining.join(touched, "part", "left_semi").select("part", "url_hash"),
-                sidecar.join(touched, "part", "left_anti"),
-                cycle_id=cyc, nbits=self.cfg.bloom_nbits, k=self.cfg.bloom_k,
-            )
+        sidecar_new = seen.forget(self.sidecar, targets, remaining, sidecar, cyc)
         frontier_new = self.cat.read("frontier", snap).join(
             targets.select(*keys), keys, "left_anti"
         )
@@ -1261,7 +1222,7 @@ class CrawlEngine:
         )
         txn = self.cat.begin()
         txn.overwrite("url_seen", remaining, partition_by=["part"])
-        txn.overwrite(self._sidecar_table, sidecar_new)
+        txn.overwrite(self.sidecar.table, sidecar_new)
         txn.overwrite("frontier", frontier_new)
         txn.overwrite("resolved", resolved_new)
         txn.overwrite("retry_state", retry_new)
@@ -1323,15 +1284,15 @@ class CrawlEngine:
             "url_hash", "url_norm",
             F.lit(cyc).cast("long").alias("first_cycle"), "part",
         )
-        sidecar_new = self._fold_sidecar(
-            rows.select("part", "url_hash"),
-            self.cat.read(self._sidecar_table, snap), cyc,
+        sidecar_new = seen.fold(
+            self.sidecar, rows.select("part", "url_hash"),
+            self.cat.read(self.sidecar.table, snap), cyc,
         )
         self.max_seq += n
         txn = self.cat.begin()
         txn.append("frontier", rows.select(*FRONTIER_COLS))
         txn.append("url_seen", seen_delta, partition_by=["part"])
-        txn.overwrite(self._sidecar_table, sidecar_new)
+        txn.overwrite(self.sidecar.table, sidecar_new)
         new_snap = txn.commit(
             cycle_id=cyc,
             meta={**((snap or {}).get("meta") or {}),

@@ -1,6 +1,6 @@
-"""Cuckoo-filter URL-seen sidecar (the `cuckoo` half of the north
-rule's "bloom/cuckoo URL-seen"; alternative to operators/seen.py's
-Bloom sidecar, same C4/C5 contract).
+"""Cuckoo-filter URL-seen sidecar format (the `cuckoo` half of the north
+rule's "bloom/cuckoo URL-seen"; the other kind is operators/seen.py's
+Bloom, and seen.py runs both through one C4/C5 path).
 
 Why a second sidecar: a Bloom bitset is insert-only, so *forgetting* a
 URL (re-crawl scheduling, takedown, TTL expiry) forces a rebuild of
@@ -17,7 +17,7 @@ mirroring `bloom_seen`): `bits` = little-endian uint16 array of
 the 64-bit url_hash (all constants fixed so layouts replay):
 
     fp = (h >> 48) & 0xFFFF, 0 mapped to 1       (16-bit, nonzero)
-    i1 = h & (nbuckets - 1)                       (nbuckets power of 2)
+    i1 = (h >> 16) & (nbuckets - 1)               (nbuckets power of 2)
     i2 = i1 XOR ((fp * 0x5bd1e995) & (nbuckets-1))   (self-inverse)
 
 Invariants the engine's exactness proof needs:
@@ -36,20 +36,23 @@ Invariants the engine's exactness proof needs:
   bucket_size), so the same key set folded the same way yields
   byte-identical rows on any cluster size or partitioning.
 
-The per-part fold is a sequential Python loop over an
-``array('H')`` (cuckoo insertion is inherently sequential — each
-eviction depends on the previous one), cogrouped per part exactly like
-the Bloom numpy fallback; probes are fully vectorized numpy over the
-broadcast tables. At the 10^9-discoveries design point the fold would
-move to a JVM UDAF like native/src/BloomFold.scala — but unlike the
-Bloom OR, cuckoo tables do not merge associatively, so the UDAF would
-be a sorted single-reduce per part, not a partial aggregation; the
-cogroup here has the same shuffle shape.
+The fold applies each part's inserts (or deletes) in one sequential
+pass — each eviction depends on the previous one — in the JVM
+(`Cuckoo.fold_jvm`, native/src/CuckooFilter.scala) when the native jar
+is loaded, else in a cogrouped Python loop over an ``array('H')``
+(`Cuckoo.fold_rows`); the two are byte-identical (property-tested).
+Unlike the Bloom OR, cuckoo tables do not merge associatively, so the
+JVM fold is a sorted single reduce per part, not a partial
+aggregation: both paths shuffle every key to its part. Probes are
+vectorized numpy (`_contains`) or the JVM probe, shared with the Bloom
+kind through operators/seen.py.
 """
 
 from __future__ import annotations
 
 from array import array
+from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 import pandas as pd
@@ -164,302 +167,86 @@ def _contains(
     return (t[i1] == f).any(axis=1) | (t[i2] == f).any(axis=1)
 
 
-def _apply(
-    bloom_pdf: pd.DataFrame, key: tuple, hashes: np.ndarray, cycle_id: int,
-    nbuckets: int, bucket_size: int, max_kicks: int, op: str,
-) -> pd.DataFrame:
-    """Shared cogroup body for fold/delete: load-or-init the part's
-    table, apply sorted ops, re-emit the row."""
-    if len(bloom_pdf):
-        tbl = array("H")
-        tbl.frombytes(bloom_pdf["bits"].iloc[0])
-        nbuckets = int(bloom_pdf["nbuckets"].iloc[0])
-        bucket_size = int(bloom_pdf["bucket_size"].iloc[0])
-        overflow = bool(bloom_pdf["overflow"].iloc[0])
-    else:
-        tbl = array("H", bytes(2 * nbuckets * bucket_size))
-        overflow = False
-    if len(hashes):
-        hashes = np.sort(hashes)
-        fp, i1, _ = _slots(hashes, nbuckets)
+@dataclass(frozen=True)
+class Cuckoo:
+    """The cuckoo sidecar format (see the module docstring); the shared
+    probes, fold skeleton and forget are in operators/seen.py."""
+
+    nbuckets: int = NBUCKETS_DEFAULT
+    bucket_size: int = BUCKET_SIZE
+
+    table: ClassVar[str] = "cuckoo_seen"
+    schema: ClassVar[T.StructType] = CUCKOO_SEEN
+    # numpy view of `bits`; the row columns `contains` takes after it
+    dtype: ClassVar[type] = np.uint16
+    row_args: ClassVar[tuple[str, ...]] = ("nbuckets", "bucket_size", "overflow")
+    contains: ClassVar = staticmethod(_contains)
+    # native/src/CuckooFilter.scala: (class, registration method, UDF name)
+    jvm_probe: ClassVar[tuple[str, str, str]] = (
+        "CuckooFilter", "registerProbe", "crawlspark_cuckoo_probe",
+    )
+    deletes: ClassVar[bool] = True
+
+    @property
+    def row_bytes(self) -> int:
+        return 2 * self.nbuckets * self.bucket_size
+
+    def fold_rows(self, part: int, hashes: np.ndarray, row: pd.DataFrame,
+                  cycle_id: int, op: str) -> pd.DataFrame:
+        """Python fold of one part: load-or-init its table, apply the
+        sorted inserts (or deletes), re-emit the row."""
+        nb, bs = self.nbuckets, self.bucket_size
+        if len(row):
+            tbl = array("H")
+            tbl.frombytes(row["bits"].iloc[0])
+            overflow = bool(row["overflow"].iloc[0])
+        else:
+            tbl = array("H", bytes(2 * nb * bs))
+            overflow = False
+        fp, i1, _ = _slots(np.sort(hashes), nb)
         if op == "insert":
-            overflow = (
-                _insert_all(tbl, fp, i1, nbuckets, bucket_size, max_kicks) or overflow
-            )
+            overflow = _insert_all(tbl, fp, i1, nb, bs, MAX_KICKS) or overflow
         else:
-            _delete_all(tbl, fp, i1, nbuckets, bucket_size)
-    return pd.DataFrame(
-        {
-            "part": [key[0]],
-            "cycle_id": [cycle_id],
-            "nbuckets": [nbuckets],
-            "bucket_size": [bucket_size],
-            "overflow": [overflow],
-            "bits": [tbl.tobytes()],
-        }
-    )
+            _delete_all(tbl, fp, i1, nb, bs)
+        return pd.DataFrame({
+            "part": [part], "cycle_id": [cycle_id], "nbuckets": [nb],
+            "bucket_size": [bs], "overflow": [overflow], "bits": [tbl.tobytes()],
+        })
 
-
-def _cogroup_op(
-    keys: DataFrame, cuckoo: DataFrame, cycle_id: int, nbuckets: int,
-    bucket_size: int, max_kicks: int, op: str,
-) -> DataFrame:
-    def body(key: tuple, new_pdf: pd.DataFrame, ck_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _apply(
-            ck_pdf, key, new_pdf["url_hash"].to_numpy(np.int64), cycle_id,
-            nbuckets, bucket_size, max_kicks, op,
+    def fold_jvm(self, keys: DataFrame, rows: DataFrame, cycle_id: int,
+                 op: str) -> DataFrame:
+        """JVM fold (native/src/CuckooFilter.scala): the per-part hash
+        list is gathered JVM-side — sort_array(collect_list(...)), the
+        same shuffle shape as the cogroup, since the layout depends on
+        insert order and so cannot partial-aggregate like the Bloom OR —
+        and a scalar JVM UDF applies the sorted sequential insert or
+        delete. Registration pins the geometry, which is why a sidecar
+        keeps one geometry for its life (the engine does)."""
+        spark = keys.sparkSession
+        spark._jvm.crawlspark.nativejvm.CuckooFilter.register(
+            spark._jsparkSession, "crawlspark_cuckoo_fold",
+            self.nbuckets, self.bucket_size, MAX_KICKS,
         )
-
-    touched = keys.select("part").distinct()
-    changed = (
-        keys.groupBy("part")
-        .cogroup(cuckoo.join(touched, "part", "left_semi").groupBy("part"))
-        .applyInPandas(body, schema=CUCKOO_SEEN)
-    )
-    untouched = cuckoo.join(touched, "part", "left_anti")
-    return changed.unionByName(untouched)
-
-
-def _native_cuckoo_loaded(spark) -> bool:
-    from . import seen as seen_mod
-
-    if not seen_mod._native_loaded(spark):
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName("crawlspark.nativejvm.CuckooFilter")
-        return True
-    except Exception:
-        return False  # older jar without the cuckoo class
-
-
-def fold_cuckoo_native(
-    new_hashes: DataFrame, cuckoo: DataFrame, cycle_id: int,
-    nbuckets: int, bucket_size: int, max_kicks: int, op: str = "insert",
-) -> DataFrame | None:
-    """Fold (or delete) with zero Python stages (native/src/
-    CuckooFilter.scala): the per-part hash list is gathered JVM-side —
-    sort_array(collect_list(...)), the same shuffle shape as the
-    cogroup, since cuckoo layout depends on insert order and therefore
-    cannot partial-aggregate like the Bloom OR — and a scalar JVM UDF
-    applies the sorted sequential insert/delete. Bit-identical to the
-    Python fold (property-tested). None when the jar isn't loaded.
-
-    Registration pins nbuckets/bucket_size/max_kicks as constants, so
-    callers must keep them fixed per sidecar (the engine does); the
-    Python path reads them from the row instead."""
-    spark = new_hashes.sparkSession
-    if not _native_cuckoo_loaded(spark):
-        return None
-    spark._jvm.crawlspark.nativejvm.CuckooFilter.register(
-        spark._jsparkSession, "crawlspark_cuckoo_fold",
-        nbuckets, bucket_size, max_kicks,
-    )
-    grouped = new_hashes.groupBy("part").agg(
-        F.sort_array(F.collect_list("url_hash")).alias("hs")
-    )
-    joined = grouped.join(cuckoo.select("part", "overflow", "bits"), "part", "left")
-    if op == "insert":
-        staged = joined.select(
-            "part",
-            F.expr(
-                "crawlspark_cuckoo_fold(bits, coalesce(overflow, false), hs)"
-            ).alias("_st"),
+        hs = keys.groupBy("part").agg(
+            F.sort_array(F.collect_list("url_hash")).alias("hs")
         )
-        changed = staged.select(
+        if op == "insert":
+            st = hs.join(rows.select("part", "overflow", "bits"), "part", "left").select(
+                "part",
+                F.expr("crawlspark_cuckoo_fold(bits, coalesce(overflow, false), hs)")
+                .alias("_st"),
+            )
+            overflow, bits = F.col("_st._2"), F.col("_st._1")
+        else:
+            # delete targets are semi-joined against the exact table, so
+            # their parts have rows; the inner join drops any that don't
+            st = hs.join(rows.select("part", "overflow", "bits"), "part", "inner")
+            overflow, bits = F.col("overflow"), F.expr("crawlspark_cuckoo_fold_del(bits, hs)")
+        return st.select(
             "part",
             F.lit(cycle_id).cast("long").alias("cycle_id"),
-            F.lit(nbuckets).cast("long").alias("nbuckets"),
-            F.lit(bucket_size).cast("int").alias("bucket_size"),
-            F.col("_st._2").alias("overflow"),
-            F.col("_st._1").alias("bits"),
+            F.lit(self.nbuckets).cast("long").alias("nbuckets"),
+            F.lit(self.bucket_size).cast("int").alias("bucket_size"),
+            overflow.alias("overflow"),
+            bits.alias("bits"),
         )
-    else:
-        # delete: rows must exist (targets are semi-joined against the
-        # exact table, whose parts were folded); missing rows no-op out
-        # via the inner join below, matching the cogroup's behavior
-        joined = grouped.join(
-            cuckoo.select("part", "cycle_id", "nbuckets", "bucket_size",
-                          "overflow", "bits"),
-            "part", "inner",
-        )
-        changed = joined.select(
-            "part",
-            F.lit(cycle_id).cast("long").alias("cycle_id"),
-            "nbuckets", "bucket_size", "overflow",
-            F.expr("crawlspark_cuckoo_fold_del(bits, hs)").alias("bits"),
-        )
-    untouched = cuckoo.join(grouped.select("part"), "part", "left_anti")
-    out = changed.unionByName(untouched.select(*changed.columns))
-    # JVM plans keep the input lineage (same caveat as fold_bloom_native):
-    # re-alias every column so composing with overlapping sources never
-    # trips the ambiguous-self-join check
-    return out.select(*[F.col(c).alias(c) for c in out.columns])
-
-
-def fold_cuckoo(
-    new_hashes: DataFrame,  # columns: part int, url_hash long
-    cuckoo: DataFrame,  # current cuckoo_seen table
-    cycle_id: int,
-    nbuckets: int = NBUCKETS_DEFAULT,
-    bucket_size: int = BUCKET_SIZE,
-    max_kicks: int = MAX_KICKS,
-) -> DataFrame:
-    """C5 analogue: insert this cycle's novel url_hashes into each
-    partition's filter. Untouched parts keep their old row. Dispatches
-    to the JVM fold when the native jar is loaded (same bits, no
-    Python stage); the cogroup below is the universal fallback."""
-    native = fold_cuckoo_native(
-        new_hashes, cuckoo, cycle_id, nbuckets, bucket_size, max_kicks
-    )
-    if native is not None:
-        return native
-    return _cogroup_op(
-        new_hashes, cuckoo, cycle_id, nbuckets, bucket_size, max_kicks, "insert"
-    )
-
-
-def delete_cuckoo(
-    del_hashes: DataFrame,  # columns: part int, url_hash long
-    cuckoo: DataFrame,
-    cycle_id: int,
-) -> DataFrame:
-    """Remove keys from the sidecar in place — the operation a Bloom
-    bitset cannot do (operators/seen.py rebuilds the part instead).
-    Callers must pass only keys present in the exact table."""
-    spark = del_hashes.sparkSession
-    if _native_cuckoo_loaded(spark):
-        # geometry from the table itself (delete has no config context);
-        # one tiny collect — forgets are rare relative to folds
-        first = cuckoo.select("nbuckets", "bucket_size").limit(1).collect()
-        if first:
-            native = fold_cuckoo_native(
-                del_hashes, cuckoo, cycle_id,
-                int(first[0][0]), int(first[0][1]), MAX_KICKS, op="delete",
-            )
-            if native is not None:
-                return native
-    return _cogroup_op(del_hashes, cuckoo, cycle_id, 0, 0, 0, "delete")
-
-
-def cuckoo_prefilter_native(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame | None:
-    """Adds `maybe_seen` via the JVM-native probe (CuckooFilter.scala):
-    tables collected + broadcast once, probed by a registered JVM UDF —
-    no Python/Arrow on the per-URL hot path. None when the jar isn't
-    loaded. Re-registration destroys the previous cycle's broadcast."""
-    spark = candidates.sparkSession
-    if not _native_cuckoo_loaded(spark):
-        return None
-    spark._jvm.crawlspark.nativejvm.CuckooFilter.registerProbe(
-        spark._jsparkSession, cuckoo._jdf, "crawlspark_cuckoo_probe"
-    )
-    return candidates.withColumn(
-        "maybe_seen", F.expr("crawlspark_cuckoo_probe(part, url_hash)")
-    )
-
-
-def cuckoo_prefilter_broadcast(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame:
-    """Adds `maybe_seen` via a broadcast probe (collect P × 2·nbuckets·
-    bucket_size bytes once, vectorized numpy probe per Arrow batch) —
-    same envelope as seen.bloom_prefilter_broadcast."""
-    from . import seen as seen_mod
-
-    spark = candidates.sparkSession
-    tables = {
-        int(r["part"]): (
-            np.frombuffer(r["bits"], dtype=np.uint16),
-            int(r["nbuckets"]),
-            int(r["bucket_size"]),
-            bool(r["overflow"]),
-        )
-        for r in cuckoo.collect()
-    }
-    bc = spark.sparkContext.broadcast(tables)
-    seen_mod._BROADCASTS.append(bc)  # released by engine per cycle
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(part: pd.Series, url_hash: pd.Series) -> pd.Series:
-        t = bc.value
-        pv = part.to_numpy()
-        hv = url_hash.to_numpy(np.int64)
-        out = np.zeros(len(pv), dtype=bool)
-        for p in np.unique(pv):
-            e = t.get(int(p))
-            if e is not None:
-                m = pv == p
-                out[m] = _contains(e[0], hv[m], e[1], e[2], e[3])
-        return pd.Series(out)
-
-    return candidates.withColumn("maybe_seen", probe("part", "url_hash"))
-
-
-def cuckoo_prefilter(candidates: DataFrame, cuckoo: DataFrame) -> DataFrame:
-    """Cogrouped partition-local probe — the stays-distributed path for
-    sidecars too big to broadcast."""
-    cand_cols = candidates.schema.fieldNames()
-    out_schema = T.StructType(
-        list(candidates.schema.fields)
-        + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(key: tuple, cand_pdf: pd.DataFrame, ck_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0:
-            return pd.DataFrame(columns=[*cand_cols, "maybe_seen"])
-        if len(ck_pdf) == 0:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        else:
-            maybe = _contains(
-                np.frombuffer(ck_pdf["bits"].iloc[0], dtype=np.uint16),
-                cand_pdf["url_hash"].to_numpy(np.int64),
-                int(ck_pdf["nbuckets"].iloc[0]),
-                int(ck_pdf["bucket_size"].iloc[0]),
-                bool(ck_pdf["overflow"].iloc[0]),
-            )
-        return cand_pdf.assign(maybe_seen=maybe)
-
-    return (
-        candidates.groupBy("part")
-        .cogroup(cuckoo.groupBy("part"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-
-
-def seen_filter(
-    candidates: DataFrame, url_seen: DataFrame, cuckoo: DataFrame,
-    broadcast_filter: bool | None = None,
-    seen_mirror: str | None = None,
-) -> DataFrame:
-    """C4 with the cuckoo sidecar: same exactness argument as
-    seen.seen_filter — the filter only routes rows *toward* the exact
-    anti-join (false positives, overflow parts), never around it."""
-    from . import seen as seen_mod
-
-    if broadcast_filter is None:
-        first = cuckoo.select("nbuckets", "bucket_size").limit(1).collect()
-        if first:
-            row_bytes = 2 * int(first[0][0]) * int(first[0][1])
-            broadcast_filter = (
-                cuckoo.count() * row_bytes <= seen_mod.BROADCAST_BLOOM_MAX_BYTES
-            )
-        else:
-            broadcast_filter = True
-    if broadcast_filter:
-        probed = cuckoo_prefilter_native(candidates, cuckoo)
-        if probed is None:
-            probed = cuckoo_prefilter_broadcast(candidates, cuckoo)
-    else:
-        probed = cuckoo_prefilter(candidates, cuckoo)
-    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    if seen_mirror is not None:
-        from . import bucketing
-
-        checked = bucketing.colocated_anti_join(
-            maybe, candidates.sparkSession, seen_mirror,
-            ["url_hash", "url_norm"],
-        )
-    else:
-        checked = maybe.join(
-            url_seen.select("url_hash", "url_norm"),
-            ["url_hash", "url_norm"], "left_anti",
-        )
-    return definitely_new.unionByName(checked)

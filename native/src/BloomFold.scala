@@ -16,21 +16,22 @@ import org.apache.spark.sql.functions
   * the 10^9-discoveries-per-cycle design point.
   *
   * Bit layout is identical to the numpy implementation (double
-  * hashing: h2 = (h1 * 0x9E3779B97F4A7C15) | 1, pos_i = (h1 + i*h2)
-  * mod_unsigned nbits); bit-parity is property-tested from pytest.
+  * hashing: m = BloomFold.fmix64(hash), h1 = low 32 bits of m,
+  * h2 = high 32 bits | 1, pos_i = (h1 + i*h2) mod_unsigned nbits);
+  * bit-parity is property-tested from pytest.
   */
 class BloomFoldAgg(nbits: Long, k: Int)
     extends Aggregator[Long, Array[Byte], Array[Byte]]
     with Serializable {
-  private val GOLDEN = 0x9E3779B97F4A7C15L
-
   def zero: Array[Byte] = new Array[Byte]((nbits / 8L).toInt)
 
   def reduce(bits: Array[Byte], hash: Long): Array[Byte] = {
-    val h2 = (hash * GOLDEN) | 1L
+    val m = BloomFold.fmix64(hash)
+    val h1 = m & 0xFFFFFFFFL
+    val h2 = (m >>> 32) | 1L
     var i = 0
     while (i < k) {
-      val pos = java.lang.Long.remainderUnsigned(hash + i.toLong * h2, nbits)
+      val pos = java.lang.Long.remainderUnsigned(h1 + i.toLong * h2, nbits)
       val bi = (pos >>> 3).toInt
       bits(bi) = (bits(bi) | (1 << (pos & 7L).toInt)).toByte
       i += 1
@@ -50,6 +51,16 @@ class BloomFoldAgg(nbits: Long, k: Int)
 }
 
 object BloomFold {
+
+  /** MurmurHash3's 64-bit finalizer: every input bit reaches both
+    * 32-bit halves, so keys sharing `hash mod P` (one seen part) still
+    * get independent h1/h2 (operators/seen.py `_bit_positions`). */
+  def fmix64(x: Long): Long = {
+    var h = x
+    h = (h ^ (h >>> 33)) * 0xFF51AFD7ED558CCDL
+    h = (h ^ (h >>> 33)) * 0xC4CEB9FE1A85EC53L
+    h ^ (h >>> 33)
+  }
 
   /** Register `name` (the per-group hash→bitset UDAF) and `name_or`
     * (null-tolerant bitwise OR of two bitsets, for merging with the

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.udf
   * round-trip per batch; this keeps the per-URL hot path entirely in
   * the JVM: bitsets are collected once per cycle, broadcast, and
   * probed by a registered UDF with the exact double-hashing scheme of
-  * the numpy implementation (h1 = hash as u64; h2 = (h1 *
-  * 0x9E3779B97F4A7C15) | 1; pos_i = (h1 + i*h2) mod nbits, unsigned).
+  * the numpy implementation (m = fmix64(hash); h1 = low 32 bits of m;
+  * h2 = high 32 bits | 1; pos_i = (h1 + i*h2) mod nbits, unsigned).
   * Java long arithmetic wraps identically to numpy uint64 for + and *,
   * and remainderUnsigned supplies the unsigned modulo — bit-equality
   * with the Python probe is property-tested from pytest.
@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions.udf
   * (e.g. in the driver's own session).
   */
 object BloomProbe {
-  private val GOLDEN = 0x9E3779B97F4A7C15L
   private var last: Broadcast[Map[Int, (Array[Byte], Long, Int)]] = null
 
   def register(spark: SparkSession, bloom: DataFrame, name: String): Unit = {
@@ -39,11 +38,13 @@ object BloomProbe {
       bc.value.get(part) match {
         case None => false
         case Some((bits, nbits, k)) =>
-          val h2 = (hash * GOLDEN) | 1L
+          val m = BloomFold.fmix64(hash)
+          val h1 = m & 0xFFFFFFFFL
+          val h2 = (m >>> 32) | 1L
           var i = 0
           var all = true
           while (i < k && all) {
-            val pos = java.lang.Long.remainderUnsigned(hash + i.toLong * h2, nbits)
+            val pos = java.lang.Long.remainderUnsigned(h1 + i.toLong * h2, nbits)
             val b = bits((pos >>> 3).toInt)
             all = ((b >> (pos & 7L).toInt) & 1) == 1
             i += 1

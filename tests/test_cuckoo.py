@@ -8,10 +8,12 @@ from pyspark.sql import functions as F
 
 from crawlspark.engine import CrawlEngine, EngineConfig
 from crawlspark.operators import cuckoo, seen
+from crawlspark.operators.cuckoo import Cuckoo
 from crawlspark.queries.crawlq import fork, scenario
 from crawlspark.synth import UNIT
 
 N_PARTS = 4
+CK = Cuckoo(nbuckets=1 << 12)
 
 
 def _keys_df(spark, hashes: np.ndarray):
@@ -31,9 +33,7 @@ def _rand_hashes(seed: int, n: int) -> np.ndarray:
 @pytest.fixture(scope="module")
 def folded(spark):
     ins = _rand_hashes(1, 5000)
-    ck = cuckoo.fold_cuckoo(
-        _keys_df(spark, ins), _empty(spark), cycle_id=1, nbuckets=1 << 12
-    )
+    ck = seen.fold(CK, _keys_df(spark, ins), _empty(spark), 1)
     rows = {r["part"]: r for r in ck.collect()}
     return ins, rows
 
@@ -78,9 +78,7 @@ def test_layout_deterministic_across_partitionings(spark, folded):
     df = _keys_df(spark, ins).repartition(7)
     rows2 = {
         r["part"]: r
-        for r in cuckoo.fold_cuckoo(
-            df, _empty(spark), cycle_id=1, nbuckets=1 << 12
-        ).collect()
+        for r in seen.fold(CK, df, _empty(spark), 1).collect()
     }
     assert set(rows) == set(rows2)
     for p in rows:
@@ -90,14 +88,10 @@ def test_layout_deterministic_across_partitionings(spark, folded):
 def test_iterated_fold_membership_equals_oneshot(spark, folded):
     ins, oneshot = folded
     a, b = ins[:2500], ins[2500:]
-    step1 = cuckoo.fold_cuckoo(
-        _keys_df(spark, a), _empty(spark), cycle_id=1, nbuckets=1 << 12
-    )
+    step1 = seen.fold(CK, _keys_df(spark, a), _empty(spark), 1)
     rows2 = {
         r["part"]: r
-        for r in cuckoo.fold_cuckoo(
-            _keys_df(spark, b), step1, cycle_id=2, nbuckets=1 << 12
-        ).collect()
+        for r in seen.fold(CK, _keys_df(spark, b), step1, 2).collect()
     }
     assert _probe_rows(rows2, ins).all()
     probe = _rand_hashes(3, 3000)
@@ -111,12 +105,10 @@ def test_iterated_fold_membership_equals_oneshot(spark, folded):
 def test_delete_preserves_other_keys(spark):
     ins = _rand_hashes(4, 6000)
     keep, drop = ins[:3000], ins[3000:]
-    ck = cuckoo.fold_cuckoo(
-        _keys_df(spark, ins), _empty(spark), cycle_id=1, nbuckets=1 << 12
-    )
+    ck = seen.fold(CK, _keys_df(spark, ins), _empty(spark), 1)
     after = {
         r["part"]: r
-        for r in cuckoo.delete_cuckoo(_keys_df(spark, drop), ck, cycle_id=2).collect()
+        for r in seen.fold(CK, _keys_df(spark, drop), ck, 2, op="delete").collect()
     }
     assert _probe_rows(after, keep).all()  # duplicates retained => sound
     assert _probe_rows(after, drop).mean() < 0.01  # actually removed
@@ -126,9 +118,7 @@ def test_overflow_failsafe(spark):
     ins = _rand_hashes(5, 500)
     rows = {
         r["part"]: r
-        for r in cuckoo.fold_cuckoo(
-            _keys_df(spark, ins), _empty(spark), cycle_id=1, nbuckets=2,
-        ).collect()
+        for r in seen.fold(Cuckoo(2), _keys_df(spark, ins), _empty(spark), 1).collect()
     }
     assert any(r["overflow"] for r in rows.values())
     # degraded parts answer all-maybe: still zero false negatives
@@ -145,8 +135,8 @@ def test_spark_probe_paths_match_local(spark, folded):
         for r, m in zip(cand.collect(), _probe_rows(rows, probe))
     }
     for probed in (
-        cuckoo.cuckoo_prefilter_broadcast(cand, ck),
-        cuckoo.cuckoo_prefilter(cand, ck),
+        seen.bloom_prefilter_broadcast(cand, ck),
+        seen.bloom_prefilter(cand, ck),
     ):
         got = {
             (int(r["part"]), int(r["url_hash"])): bool(r["maybe_seen"])
@@ -195,15 +185,21 @@ def test_forget_allows_recrawl(spark, unit_engines, flavor):
         "part", F.pmod("url_hash", F.lit(eng.cfg.n_seen_parts)).cast("int")
     )
     snap2 = eng.cat.current_snapshot()
-    novel = eng._seen_filter(
-        cand, eng.cat.read("url_seen", snap2),
-        eng.cat.read(eng._sidecar_table, snap2), snap2,
+    novel = seen.seen_filter(
+        cand, eng.cat.read("url_seen", snap2), eng.cat.read(eng.sidecar.table, snap2)
     )
     got = {r["url_norm"] for r in novel.collect()}
     assert got == set(victims)
     seen.release_broadcasts(spark)
     # max_seq monotone: re-crawled discoveries get strictly newer seqs
     assert int((snap.get("meta") or {}).get("max_seq", 0)) <= eng.max_seq
+
+
+@pytest.mark.parametrize("name", ["Cuckoo", "blom", ""])
+def test_unknown_sidecar_refused(spark, tmp_path, name):
+    with pytest.raises(ValueError, match="seen_sidecar"):
+        CrawlEngine(spark, EngineConfig(warehouse=str(tmp_path / "wh"), seen_sidecar=name))
+    assert not (tmp_path / "wh").exists()
 
 
 # --- JVM-native fold/probe/delete parity (CuckooFilter.scala) ------------
@@ -213,21 +209,17 @@ def _force_python(monkeypatch):
 
 
 def test_native_fold_matches_python(spark, monkeypatch):
-    if not cuckoo._native_cuckoo_loaded(spark):
+    if not seen._native_loaded(spark):
         pytest.skip("native jar not on classpath")
     ins = _rand_hashes(7, 4000)
     nat = {
         r["part"]: r
-        for r in cuckoo.fold_cuckoo(
-            _keys_df(spark, ins), _empty(spark), cycle_id=1, nbuckets=1 << 12
-        ).collect()
+        for r in seen.fold(CK, _keys_df(spark, ins), _empty(spark), 1).collect()
     }
     _force_python(monkeypatch)
     py = {
         r["part"]: r
-        for r in cuckoo.fold_cuckoo(
-            _keys_df(spark, ins), _empty(spark), cycle_id=1, nbuckets=1 << 12
-        ).collect()
+        for r in seen.fold(CK, _keys_df(spark, ins), _empty(spark), 1).collect()
     }
     assert set(nat) == set(py)
     for p in py:
@@ -236,17 +228,14 @@ def test_native_fold_matches_python(spark, monkeypatch):
 
 
 def test_native_iterated_fold_and_delete_match_python(spark, monkeypatch):
-    if not cuckoo._native_cuckoo_loaded(spark):
+    if not seen._native_loaded(spark):
         pytest.skip("native jar not on classpath")
     a, b = _rand_hashes(8, 2000), _rand_hashes(9, 2000)
 
     def run():
-        step = cuckoo.fold_cuckoo(
-            _keys_df(spark, a), _empty(spark), cycle_id=1, nbuckets=1 << 12
-        )
-        step = cuckoo.fold_cuckoo(_keys_df(spark, b), step, cycle_id=2,
-                                  nbuckets=1 << 12)
-        step = cuckoo.delete_cuckoo(_keys_df(spark, b[:500]), step, cycle_id=3)
+        step = seen.fold(CK, _keys_df(spark, a), _empty(spark), 1)
+        step = seen.fold(CK, _keys_df(spark, b), step, 2)
+        step = seen.fold(CK, _keys_df(spark, b[:500]), step, 3, op="delete")
         return {r["part"]: r for r in step.collect()}
 
     nat = run()
@@ -258,35 +247,28 @@ def test_native_iterated_fold_and_delete_match_python(spark, monkeypatch):
 
 
 def test_native_probe_matches_python_and_has_no_python_stage(spark):
-    if not cuckoo._native_cuckoo_loaded(spark):
+    if not seen._native_loaded(spark):
         pytest.skip("native jar not on classpath")
     ins = _rand_hashes(10, 3000)
-    ck = cuckoo.fold_cuckoo(
-        _keys_df(spark, ins), _empty(spark), cycle_id=1, nbuckets=1 << 12
-    )
+    ck = seen.fold(CK, _keys_df(spark, ins), _empty(spark), 1)
     probe = np.concatenate([ins[:500], _rand_hashes(11, 500)])
     cand = _keys_df(spark, probe)
-    nat = cuckoo.cuckoo_prefilter_native(cand, ck)
+    nat = seen.bloom_prefilter_native(cand, ck)
     got = {(r["part"], r["url_hash"]): r["maybe_seen"] for r in nat.collect()}
     exp = {
         (r["part"], r["url_hash"]): r["maybe_seen"]
-        for r in cuckoo.cuckoo_prefilter_broadcast(cand, ck).collect()
+        for r in seen.bloom_prefilter_broadcast(cand, ck).collect()
     }
     assert got == exp
     plan = nat._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan  # probe never crosses into Python
-    from crawlspark.operators import seen as seen_mod
-
-    seen_mod.release_broadcasts(spark)
+    seen.release_broadcasts(spark)
 
 
 def test_native_fold_plan_has_no_python_stage(spark):
-    if not cuckoo._native_cuckoo_loaded(spark):
+    if not seen._native_loaded(spark):
         pytest.skip("native jar not on classpath")
-    df = cuckoo.fold_cuckoo(
-        _keys_df(spark, _rand_hashes(12, 100)), _empty(spark),
-        cycle_id=1, nbuckets=1 << 12,
-    )
+    df = seen.fold(CK, _keys_df(spark, _rand_hashes(12, 100)), _empty(spark), 1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
 
@@ -378,9 +360,7 @@ def test_fold_per_part_working_set_bounded(spark):
     # fold the whole batch (~6.3k keys/part at 95% fill headroom) and
     # verify exact membership — one pass, no chunking needed, because
     # the per-part list is the bound, not the total
-    ck = cuckoo.fold_cuckoo(
-        keys, _empty(spark), cycle_id=1, nbuckets=1 << 11
-    )
+    ck = seen.fold(Cuckoo(1 << 11), keys, _empty(spark), 1)
     rows = ck.collect()
     assert len(rows) == parts
     assert not any(r["overflow"] for r in rows), "fill headroom misjudged"

@@ -1,13 +1,17 @@
-"""JVM-native Bloom probe (native/src/BloomProbe.scala): bit-parity
-with the numpy probe, no false negatives, and graceful fallback when
-the jar is absent."""
+"""JVM-native sidecar fold and probe (native/src/): bit-parity with the
+numpy paths, no false negatives, and graceful fallback when the jar is
+absent."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from crawlspark.operators import seen
+from crawlspark.operators.cuckoo import Cuckoo
 from crawlspark.schemas import BLOOM_SEEN
 
 
@@ -53,12 +57,56 @@ def test_native_probe_matches_python(spark):
     bloom.unpersist()
 
 
-def test_seen_filter_native_equals_python_paths(spark):
+def test_bloom_meets_design_fp_within_one_part(spark):
+    """Every key of one seen part shares `url_hash mod P`. The Bloom
+    must still meet its design false-positive rate there, in numpy and
+    in the JVM fold + probe: positions taken from the raw hash's low
+    bits told apart only 2^20 / 16 keys per part (FP ~0.6 at this load)."""
+    n, n_probe, nbits, k = 62_500, 200_000, seen.NBITS_DEFAULT, seen.K_DEFAULT
+    design = (1 - math.exp(-k * n / nbits)) ** k  # 7.4e-4
+    keys = np.random.default_rng(5).integers(
+        -2**63, 2**63 - 1, size=n + n_probe, dtype=np.int64
+    ) & ~np.int64(15)
+    members, others = keys[:n], keys[n:]
+    others = others[~np.isin(others, members)]
+    bits = np.zeros(nbits // 8, dtype=np.uint8)
+    seen._insert(bits, members, nbits, k)
+    assert seen._contains(bits, members, nbits, k).all()
+    assert seen._contains(bits, others, nbits, k).mean() <= 2 * design
+    if not seen._native_loaded(spark):
+        return
+
+    def part0(lo, hi):  # xxhash64(id) with its residue mod 16 cleared
+        h = F.xxhash64("id")
+        return spark.range(lo, hi).select(
+            F.lit(0).alias("part"), (h - F.pmod(h, F.lit(16))).alias("url_hash")
+        )
+
+    bloom = seen.fold_bloom(
+        part0(0, n), spark.createDataFrame([], BLOOM_SEEN), cycle_id=1
+    ).persist()
+
+    def n_maybe(cand):
+        return seen.bloom_prefilter_native(cand, bloom).filter("maybe_seen").count()
+
+    assert n_maybe(part0(0, n)) == n
+    assert n_maybe(part0(n, n + n_probe)) / n_probe <= 2 * design
+    seen.release_broadcasts(spark)
+    bloom.unpersist()
+
+
+@pytest.mark.parametrize("kind", [seen.Bloom(), Cuckoo(nbuckets=1 << 12)],
+                         ids=["bloom", "cuckoo"])
+def test_seen_filter_native_equals_python_paths(spark, monkeypatch, kind):
     """The full C4 seen_filter returns the same survivor set through
-    the native, Python-broadcast, and cogroup probe strategies."""
+    the native, Python-broadcast, and cogroup probe strategies, for
+    both sidecar kinds."""
     rng = np.random.default_rng(11)
     members = rng.integers(-2**63, 2**63 - 1, size=5000, dtype=np.int64)
-    bloom, _ = _bloom_over(spark, members, nparts=4)
+    new = spark.createDataFrame(
+        [(int((h % 4 + 4) % 4), int(h)) for h in members], "part int, url_hash long"
+    )
+    sidecar = seen.fold(kind, new, spark.createDataFrame([], kind.schema), 1).persist()
     url_seen = spark.createDataFrame(
         [
             (int(h), f"http://h/p{i}", 0, int((h % 4 + 4) % 4))
@@ -77,14 +125,18 @@ def test_seen_filter_native_equals_python_paths(spark):
         ],
         "url_hash long, url_norm string, part int",
     )
-    outs = []
-    for bb in (True, False):
-        out = seen.seen_filter(cand, url_seen, bloom, broadcast_bloom=bb)
-        outs.append(sorted((r["url_hash"], r["url_norm"]) for r in out.collect()))
-    assert outs[0] == outs[1]
-    assert len(outs[0]) == 2000  # exactly the never-seen half survives
+
+    def survivors(broadcast):
+        out = seen.seen_filter(cand, url_seen, sidecar, broadcast_bloom=broadcast)
+        return sorted((r["url_hash"], r["url_norm"]) for r in out.collect())
+
+    native, cogroup = survivors(True), survivors(False)
+    monkeypatch.setenv("CRAWLSPARK_NO_NATIVE", "1")  # the Python broadcast probe
+    python_broadcast = survivors(True)
+    assert native == python_broadcast == cogroup
+    assert len(native) == 2000  # exactly the never-seen half survives
     seen.release_broadcasts(spark)
-    bloom.unpersist()
+    sidecar.unpersist()
 
 
 def test_committed_jar_matches_source(tmp_path):
@@ -145,8 +197,7 @@ def test_native_fold_matches_python(spark, monkeypatch):
     def bits_of(df):
         return {r["part"]: bytes(r["bits"]) for r in df.collect()}
 
-    nat1 = seen.fold_bloom_native(first, empty, cycle_id=1, nbits=seen.NBITS_DEFAULT, k=seen.K_DEFAULT)
-    assert nat1 is not None
+    nat1 = seen.fold_bloom(first, empty, cycle_id=1)
     # no Python/Arrow stage anywhere in the native fold plan (C5 goal)
     plan = nat1._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapCoGroupsInPandas"):
@@ -158,7 +209,7 @@ def test_native_fold_matches_python(spark, monkeypatch):
     assert bits_of(nat1) == bits_of(py1)
 
     # second cycle: OR into the existing sidecar, cross-checked both ways
-    nat2 = seen.fold_bloom_native(second, py1, cycle_id=2, nbits=seen.NBITS_DEFAULT, k=seen.K_DEFAULT)
+    nat2 = seen.fold_bloom(second, py1, cycle_id=2)
     monkeypatch.setenv("CRAWLSPARK_NO_NATIVE", "1")
     py2 = seen.fold_bloom(second, nat1, cycle_id=2)
     monkeypatch.delenv("CRAWLSPARK_NO_NATIVE")
